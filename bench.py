@@ -185,59 +185,6 @@ def engine_kernel(spark, n_pages: int, seeds: int = 2000, depth: int = 2,
     }
 
 
-def engine_ablation_kernel(spark, n_pages: int, layers: str,
-                           seeds: int = 2000, depth: int = 2) -> dict:
-    """Depth-2 engine kernel with the three seen layers COMPOSED
-    (round-3 verdict item #8): '+'-joined subset of
-    {bloom, cuckoo, store} on top of the fingerprint anti-join
-    baseline. Each layer keeps the others' contracts: bloom splits
-    definitely-unseen candidates off the shuffle, cuckoo shards do the
-    same exactly at 10^10 scale with delete support, the bucketed
-    store makes the remaining anti-join's seen side shuffle-free."""
-    from flyscrape_spark.config import CrawlConfig
-    from flyscrape_spark.plans.frontier import CrawlEngine
-    from flyscrape_spark.sources.synth import SyntheticWebTransport
-
-    clear_persisted(spark)
-    wanted = set(filter(None, layers.split("+"))) - {"none"}
-    unknown = wanted - {"bloom", "cuckoo", "store"}
-    assert not unknown, f"unknown seen layers: {unknown}"
-    kwargs = {}
-    if "bloom" in wanted:
-        from flyscrape_spark.operators.bloom import BroadcastBloom
-
-        kwargs["seen_bloom"] = BroadcastBloom(spark, n_bits=1 << 24)
-    if "cuckoo" in wanted:
-        from flyscrape_spark.operators.cuckoo import CuckooShards
-
-        kwargs["seen_cuckoo"] = CuckooShards(
-            spark, n_shards=32, capacity_per_shard=1 << 18)
-    if "store" in wanted:
-        from flyscrape_spark.sources.seen_store import BucketedSeenStore
-
-        kwargs["seen_store"] = BucketedSeenStore(
-            spark, table=f"seen_ablation_{abs(hash(layers)) % 10**6}",
-            buckets=32, fingerprint=True)
-    config = CrawlConfig(depth=depth, domain_filter=False,
-                         seen_fingerprint=True)
-    engine = CrawlEngine(
-        spark, config, SyntheticWebTransport(n_pages),
-        collect_metrics=False, small_generation_rows=20_000, **kwargs,
-    )
-    seed_urls = [f"http://w{(i * 37) % 1009}.example/d/{i * 37}"
-                 for i in range(seeds)]
-    t0 = time.time()
-    result = engine.run(seed_urls)
-    n_seen = result.seen.count()
-    n_fetched = result.results.count()
-    dt = time.time() - t0
-    return {
-        "layers": layers or "none", "n_pages": n_pages, "seeds": seeds,
-        "depth": depth, "seen": n_seen, "fetched": n_fetched,
-        "sec": round(dt, 3), "urls_per_sec": round(n_seen / dt),
-    }
-
-
 def run_bench(cpus: int, include_queries: bool = True) -> dict:
     from flyscrape_spark.session import get_spark
 
@@ -380,42 +327,10 @@ def main():
             result["fingerprint"] = fp
         elif kind == "kernel_exact":
             result = frontier_kernel(spark, N_URLS, mode="exact")
-        elif kind.startswith("engine_ablation:"):
-            layers = kind.split(":", 1)[1]
-            engine_ablation_kernel(spark, N_ENGINE_PAGES, layers)  # warm
-            result = engine_ablation_kernel(spark, N_ENGINE_PAGES, layers)
         else:
             result = frontier_kernel(spark, N_URLS, mode="fp128")
         spark.stop()
         print("WORKER_JSON:" + json.dumps(result))
-        return
-
-    if "--ablation" in sys.argv:
-        # seen-layer ablation (round-3 verdict item #8): fresh JVM per
-        # config, baseline -> +bloom -> +bloom+cuckoo ->
-        # +bloom+cuckoo+store, depth-2 engine kernel at bench scale
-        cpus = CPUS
-        configs = os.environ.get(
-            "BENCH_ABLATION_LAYERS",
-            "none,bloom,bloom+cuckoo,bloom+cuckoo+store").split(",")
-        rows = []
-        for layers in configs:
-            proc = subprocess.run(
-                [sys.executable, __file__, "--worker", str(cpus),
-                 f"engine_ablation:{layers}"],
-                capture_output=True, text=True, timeout=3600,
-                env={**os.environ, "SPARK_DRIVER_MEMORY": "16g"},
-            )
-            line = [l for l in proc.stdout.splitlines()
-                    if l.startswith("WORKER_JSON:")]
-            if not line:
-                print(f"ablation config {layers!r} FAILED:\n"
-                      + proc.stderr[-2000:], file=sys.stderr)
-                continue
-            row = json.loads(line[0][len("WORKER_JSON:"):])
-            rows.append(row)
-            print(json.dumps(row), flush=True)
-        print(json.dumps({"ablation": rows}, indent=2))
         return
 
     if "--scaling" in sys.argv:

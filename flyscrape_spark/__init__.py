@@ -6,8 +6,8 @@ over snapshot-committed parquet tables (Iceberg-compatible layout):
 
 - frontier generations as DataFrames, one batch job per BFS depth
   (reference: 500-goroutine FIFO channel, /root/reference/scrape.go:82-131)
-- URL-seen set as an exact hash-keyed anti-join with bloom/cuckoo
-  prefilters (reference: in-memory hashmap, scrape.go:62-79)
+- URL-seen set as an exact hash-keyed anti-join over per-generation
+  increments (reference: in-memory hashmap, scrape.go:62-79)
 - link extraction / span parsing as vectorized Arrow pandas UDFs
   (reference: mutex-serialized goja JS VM, js.go:225-226)
 - per-host politeness via salted host-hash repartitioning

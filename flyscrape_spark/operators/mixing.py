@@ -11,13 +11,13 @@ Scale shapes:
   fixed document order. A ``Window.partitionBy(source)`` would put
   each source's ENTIRE corpus slice in one task — with tens of
   sources over 100 TB that is the canonical skew death. Instead it
-  reuses the engine's two-phase enumeration trick
-  (plans/frontier.py assign_global_order): range-repartition on
-  (source, doc_id) so one source spans many ordered partitions,
-  aggregate per-(partition, source) token sums (a tiny
-  partitions x sources collect), compute each partition's per-source
-  prefix offset driver-side, and add offset + within-partition
-  cumulative sum in a single Arrow pass. Parallelism stays at the
+  reuses the count-then-offset idea of the engine's two-phase
+  enumeration (plans/frontier.py assign_global_order_counted):
+  range-repartition on (source, doc_id) so one source spans many
+  ordered partitions, aggregate per-(partition, source) token sums (a
+  tiny partitions x sources collect), compute each partition's
+  per-source prefix offset driver-side, and add offset +
+  within-partition cumulative sum in a single Arrow pass. Parallelism stays at the
   partition count regardless of source skew.
 """
 

@@ -271,8 +271,8 @@ def media_frontier(
     priority signal) and the deterministic first referencing doc.
 
     Scale shape: explode -> ONE map-side-combinable groupBy on the
-    ref key; the fetched side anti-joins on that same key (bucketed
-    media stores make it exchange-free, the seen_store pattern).
+    ref key; the fetched side anti-joins on that same key (a media
+    store bucketed on it makes the anti-join exchange-free).
     """
     demand = (
         results.select(F.col(id_col).alias("doc"),

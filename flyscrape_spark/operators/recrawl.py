@@ -11,10 +11,9 @@ sources/snapshots.py (each SnapshotStore generation IS such a
 snapshot).
 
 Scale shape: ONE full-outer equi-join on the page key, linear in
-both snapshots. At 10^10 URLs both sides come from the bucketed
-seen/snapshot store bucketed on the same key (sources/seen_store.py),
-so the join is shuffle-free on both sides; here the plan is the
-plain two-shuffle sort-merge.
+both snapshots. At 10^10 URLs both snapshot tables can be bucketed
+on the same key so the join is shuffle-free on both sides; here the
+plan is the plain two-shuffle sort-merge.
 """
 
 from __future__ import annotations
@@ -318,8 +317,8 @@ def crawl_diff(
     Engine-added (the reference keeps no cross-run state beyond its
     URL cache, /root/reference/modules/cache/cache.go). Scale shape:
     one url equi-join (both sides shuffle on url — at 10^10 rows
-    bucket both snapshot tables by url, sources/seen_store.py style,
-    and the exchanges vanish) + one combinable host rollup.
+    bucket both snapshot tables by url and the exchanges vanish) + one
+    combinable host rollup.
     """
     # presence flags, not hash nullability: a URL present in BOTH
     # snapshots with a NULL content_hash on one side (fetch error,

@@ -19,7 +19,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from flyscrape_spark.parse.html import extract_links, extract_spans
+from flyscrape_spark.parse.html import extract_spans
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -38,28 +38,6 @@ def parse_spans_udf(body: pd.Series) -> pd.Series:
     """HTML body -> interleaved (kind, text, media_ref, offset) spans,
     the input_hint payload. One Python call per Arrow batch."""
     return body.map(lambda html: extract_spans(html) if html else [])
-
-
-def make_link_udf(selectors: list[str]):
-    """Build a pandas UDF extracting followed links for a fixed
-    selector config (modules/followlinks/followlinks.go:37-94):
-    per-selector document order, attr-from-selector, RFC 3986 resolve
-    against the page URL, http/https only, first-seen dedup per page.
-    Returns resolved absolute URLs in discovery order.
-    """
-    sels = list(selectors)
-
-    @F.pandas_udf(ArrayType(StringType()))
-    def link_udf(body: pd.Series, url: pd.Series) -> pd.Series:
-        if not sels:
-            return pd.Series([[] for _ in range(len(body))])
-        out = [
-            extract_links(html, origin, sels) if html else []
-            for html, origin in zip(body, url)
-        ]
-        return pd.Series(out)
-
-    return link_udf
 
 
 def make_page_udf(selectors: list[str]):

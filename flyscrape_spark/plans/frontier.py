@@ -21,12 +21,6 @@ to get wrong (SURVEY §7 "What's hard"):
 Scale design notes (100 TB / 10^10-URL frontier):
 - the anti-join shuffles on a 64-bit xxhash64 key, not URL strings;
   the exact URL string rides along as a collision tiebreak.
-- Catalyst's runtime bloom injection does NOT cover anti-join build
-  sides (measured, BENCH.md), so the engine carries its own explicit
-  broadcast bloom (operators/bloom.py, ``seen_bloom=``): definitely-
-  unseen candidates bypass the anti-join shuffle entirely, and the
-  bitmap grows incrementally (per-generation admitted keys only) —
-  the north_star's "broadcast bloom filter" made real.
 - lineage is truncated every generation (localCheckpoint here;
   snapshot-table commits in checkpointed mode) so plans stay O(1) in
   the number of generations.
@@ -37,6 +31,7 @@ Scale design notes (100 TB / 10^10-URL frontier):
 
 from __future__ import annotations
 
+import json
 import time
 from dataclasses import dataclass, field as dc_field
 
@@ -58,7 +53,6 @@ from flyscrape_spark.plans import filters as filter_mod
 from flyscrape_spark.plans.filters import validators
 from flyscrape_spark.plans.priority import prioritize_frontier
 from flyscrape_spark.sources.transport import Transport
-from urllib.parse import urlparse
 
 CAND_SCHEMA = StructType(
     [
@@ -85,39 +79,25 @@ SEEN_SCHEMA_FP = StructType(
 )
 
 
-def assign_global_order(
-    df: DataFrame, sort_cols: list[str], out_col: str, start: int = 0,
-    parts: int | None = None,
-) -> DataFrame:
-    """Scalable total ordering: global row numbers by ``sort_cols``
-    without a single-partition window sort. See
-    :func:`assign_global_order_counted` (this is the thin wrapper
-    that discards the row count)."""
-    return assign_global_order_counted(df, sort_cols, out_col, start,
-                                       parts)[0]
-
-
 def assign_global_order_counted(
     df: DataFrame, sort_cols: list[str], out_col: str, start: int = 0,
     parts: int | None = None,
-    bounds: tuple[int, int] | None = None,
+    *, bounds: tuple[int, int],
 ) -> tuple[DataFrame, int]:
     """Scalable total ordering: global row numbers by ``sort_cols``
     without a single-partition window sort. Returns (numbered_df,
     total_rows) — the total falls out of the per-bucket counts, so
     callers need NO separate count() job over the result.
 
-    Two modes, same exact result:
-
-    ``bounds=(lo, hi)`` — DETERMINISTIC bucketing (the frontier hot
-    path): the caller knows the first sort column's value range (a
-    generation's parent_order values are exactly the previous
-    generation's discovery_order slice), so bucket ids come from a
-    monotonic clamped affine map — NO range-bound sampling job and no
-    input pin; the whole ordering is ONE shuffle job + one tiny
-    counts collect per generation. Rows hash-shuffle on the bucket
-    id (a bucket lives in exactly one partition; one partition may
-    hold several buckets, sorted contiguously), per-BUCKET counts
+    DETERMINISTIC bucketing: the caller knows the first sort column's
+    value range ``bounds=(lo, hi)`` (a generation's parent_order
+    values are exactly the previous generation's discovery_order
+    slice), so bucket ids come from a monotonic clamped affine map —
+    NO range-bound sampling job and no input pin; the whole ordering
+    is ONE shuffle job (which also materializes the upstream exactly
+    once) + one O(buckets) counts collect. Rows hash-shuffle on the
+    bucket id (a bucket lives in exactly one partition; one partition
+    may hold several buckets, sorted contiguously), per-BUCKET counts
     give offsets, and the numbering pass keeps a per-bucket running
     counter. Correct for ANY monotonic bucketing — bad bounds only
     cost balance, never order. 64x more buckets than partitions keep
@@ -125,63 +105,12 @@ def assign_global_order_counted(
     few buckets per partition, murmur placement of consecutive ints
     is lumpy — measured 2.3x skew + empty partitions at 8x).
 
-    ``bounds=None`` — SAMPLED range partitioning (generic fallback,
-    exact balance): PIN the input first (one eager localCheckpoint —
-    without it ``repartitionByRange``'s sampling pass and the shuffle
-    itself would each execute the full upstream plan), then
-    range-repartition, count per partition, number with offsets.
-
     Requires unique sort keys (the generation's (parent_order, pos)
-    are unique), which makes the result independent of bucket/range
+    are unique), which makes the result independent of bucket
     boundaries. The shuffled output is localCheckpoint-pinned so the
     counts job and the numbering job see the same partitioning."""
-    spark = df.sparkSession
     if parts is None:
-        parts = spark.sparkContext.defaultParallelism
-    if bounds is not None:
-        return _assign_order_bucketed(
-            df, sort_cols, out_col, start, parts, bounds)
-    pinned = df.localCheckpoint(eager=True)
-    ranged = (
-        pinned.repartitionByRange(parts, *[F.col(c) for c in sort_cols])
-        .sortWithinPartitions(*sort_cols)
-        .localCheckpoint(eager=True)
-    )
-    counts = {
-        r["pid"]: r["n"]
-        for r in ranged.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid").agg(F.count("*").alias("n")).collect()
-    }
-    offsets = {}
-    acc = start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    # StructType.add mutates in place — build a fresh copy
-    schema = StructType(list(ranged.schema.fields) + [StructField(out_col, LongType())])
-
-    def number(iterator):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        offset = offsets.get(pid, 0)
-        emitted = 0
-        for pdf in iterator:
-            pdf[out_col] = range(offset + emitted, offset + emitted + len(pdf))
-            emitted += len(pdf)
-            yield pdf
-
-    return ranged.mapInPandas(number, schema=schema), acc - start
-
-
-def _assign_order_bucketed(
-    df: DataFrame, sort_cols: list[str], out_col: str, start: int,
-    parts: int, bounds: tuple[int, int],
-) -> tuple[DataFrame, int]:
-    """Deterministic-bucket enumeration (see
-    :func:`assign_global_order_counted` ``bounds`` mode). One shuffle
-    job (which also materializes the upstream exactly once) + one
-    O(buckets) collect."""
+        parts = df.sparkSession.sparkContext.defaultParallelism
     lo, hi = bounds
     n_buckets = parts * 64
     span = max(int(hi) - int(lo), 1)
@@ -257,9 +186,6 @@ class CrawlEngine:
         checkpoint=None,  # optional SnapshotStore for resumable crawls
         max_generations: int = 1000,
         small_generation_rows: int = 50_000,
-        seen_store=None,  # optional BucketedSeenStore (shuffle-free anti-join)
-        seen_bloom=None,  # optional BroadcastBloom (candidate-side prefilter)
-        seen_cuckoo=None,  # optional CuckooShards (sharded prefilter w/ delete)
         collect_metrics: bool = True,
         priority_scores=None,  # optional (url_key, score) DataFrame for
         # best-first admission under config.generation_budget
@@ -274,9 +200,6 @@ class CrawlEngine:
         self.checkpoint = checkpoint
         self.max_generations = max_generations
         self.small_generation_rows = small_generation_rows
-        self.seen_store = seen_store
-        self.seen_bloom = seen_bloom
-        self.seen_cuckoo = seen_cuckoo
         self.priority_scores = priority_scores
         # checkpointed crawls always record full lineage metrics
         # (manifests carry them, north_rule); plain crawls may skip
@@ -437,12 +360,22 @@ class CrawlEngine:
                 seed_rows.append((url, 0, int(i), 0))
         candidates = spark.createDataFrame(seed_rows, CAND_SCHEMA)
         seed_urls = [r[0] for r in seed_rows]
-        seed_hosts = []
-        for u in seed_urls:
-            h = urlparse(u).netloc.lower()
-            if h:
-                seed_hosts.append(h)
+        seed_hosts = self._hosts_of(seed_urls) if config.domain_filter else []
         return candidates, len(seed_rows), validators(config, seed_urls, seed_hosts)
+
+    def _hosts_of(self, urls: list[str]) -> list[str]:
+        """Distinct non-empty ``host_of`` values of list seeds — the
+        very expression the domain filter applies, so port, userinfo
+        and bracketed-IPv6 handling match table mode exactly. The
+        JSON-encoded list is one inline VALUES row (a LocalRelation):
+        Catalyst folds the projection on the driver, no Spark job."""
+        if not urls:
+            return []
+        row = self.spark.sql("SELECT * FROM VALUES (:urls) AS t(j)",
+                             args={"urls": json.dumps(urls)})
+        hosts = row.select(F.transform(
+            F.from_json("j", "array<string>"), host_of)).first()[0]
+        return list(dict.fromkeys(h for h in hosts if h))
 
     def _run(self, seeds, n_seeds: int | None = None) -> CrawlResult:
         spark = self.spark
@@ -469,21 +402,7 @@ class CrawlEngine:
                     else spark.createDataFrame([], CAND_SCHEMA)
                 )
 
-        if self.seen_store is not None:
-            # rebuild the bucketed store from resumed increments (the
-            # snapshot manifests stay the durable source of truth)
-            for frame in seen_frames:
-                self.seen_store.append(frame)
-        if self.seen_bloom is not None:
-            for frame in seen_frames:
-                self.seen_bloom.add_keys(frame)
-        if self.seen_cuckoo is not None:
-            for frame in seen_frames:
-                self.seen_cuckoo.add_keys(frame)
-
         def current_seen() -> DataFrame:
-            if self.seen_store is not None and self.seen_store.exists():
-                return self.seen_store.seen()
             if not seen_frames:
                 return spark.createDataFrame(
                     [], SEEN_SCHEMA_FP if config.seen_fingerprint
@@ -528,21 +447,6 @@ class CrawlEngine:
                     F.col("url_key").alias("seen_key"),
                     F.col("url").alias("seen_url"),
                 )
-            # 3a. broadcast-bloom prefilter (opt-in): candidates whose
-            # key misses the bloom are DEFINITELY unseen (no false
-            # negatives) and bypass the anti-join shuffle; only the
-            # possibly-seen remainder pays the exact join.
-            fresh = None
-            if self.seen_bloom is not None and self.seen_bloom.n_added > 0:
-                cand, fresh = self.seen_bloom.split(cand)
-            # 3b. sharded cuckoo prefilter (opt-in, composes after the
-            # bloom): same no-false-negative contract, but the filter
-            # is a cogrouped shard table, never driver-held — the
-            # 10^10-key form of the prefilter, and it supports delete
-            # (recrawl invalidation re-admits URLs).
-            if self.seen_cuckoo is not None and self.seen_cuckoo.n_added > 0:
-                cand, fresh_c = self.seen_cuckoo.split(cand)
-                fresh = fresh_c if fresh is None else fresh.unionByName(fresh_c)
             if config.seen_fingerprint:
                 anti_cond = (
                     (cand["url_key"] == seen_keys["seen_key"])
@@ -554,8 +458,6 @@ class CrawlEngine:
                     & (cand["url"] == seen_keys["seen_url"])
                 )
             enqueued = cand.join(seen_keys, anti_cond, "left_anti")
-            if fresh is not None:
-                enqueued = enqueued.unionByName(fresh)
 
             # 4. canonical discovery order within the generation.
             # Latency mode: one-partition window sort (fine for small
@@ -613,23 +515,14 @@ class CrawlEngine:
             # union into one pinned frame so plan size (and anti-join
             # scan fan-in) stays O(1) in crawl depth. On Iceberg this
             # is a data-compaction job over the seen table.
-            if self.seen_bloom is not None:
-                # incremental: fold ONLY this generation's newly
-                # admitted keys into the driver-held bitmap
-                self.seen_bloom.add_keys(enqueued)
-            if self.seen_cuckoo is not None:
-                self.seen_cuckoo.add_keys(enqueued)
-            if self.seen_store is not None:
-                self.seen_store.append(enqueued)
-            else:
-                seen_frames.append(enqueued)
-                if len(seen_frames) > 16:
-                    compacted = seen_frames[0]
-                    for frame in seen_frames[1:]:
-                        compacted = compacted.unionByName(frame)
-                    # lazy: the compaction runs inside the next
-                    # generation's anti-join job, not as its own job
-                    seen_frames = [compacted.localCheckpoint(eager=False)]
+            seen_frames.append(enqueued)
+            if len(seen_frames) > 16:
+                compacted = seen_frames[0]
+                for frame in seen_frames[1:]:
+                    compacted = compacted.unionByName(frame)
+                # lazy: the compaction runs inside the next
+                # generation's anti-join job, not as its own job
+                seen_frames = [compacted.localCheckpoint(eager=False)]
 
             # 6. validators run at fetch time (scrape.go:162-168);
             #    depth filter is row-wise (inclusive <=, modules/depth/

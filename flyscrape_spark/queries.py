@@ -114,58 +114,6 @@ FROM bfs GROUP BY id
 """
 
 
-def q_crawl_bfs_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship crawl with the broadcast-bloom seen prefilter
-    engaged (operators/bloom.py): definitely-unseen candidates bypass
-    the anti-join shuffle. Must reproduce the plain BFS oracle exactly
-    — blooms have no false negatives, and false positives only route a
-    candidate through the exact join."""
-    from flyscrape_spark.operators.bloom import BroadcastBloom
-
-    config = CrawlConfig(depth=BFS_DEPTH, domain_filter=False)
-    pages = synthetic_pages(spark, sf_dir)
-    engine = CrawlEngine(
-        spark, config, JoinTransport(pages, config), collect_metrics=False,
-        seen_bloom=BroadcastBloom(spark, n_bits=1 << 20),
-    )
-    result = engine.run(["http://h0.example/d/0"])
-    return (
-        result.seen.filter(F.col("depth") <= BFS_DEPTH)
-        .select("url", F.col("depth").cast("int").alias("depth"))
-    )
-
-
-def sql_crawl_bfs_bloom() -> str:
-    return sql_crawl_bfs()
-
-
-def q_crawl_bfs_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship crawl with the sharded cuckoo-filter seen prefilter
-    (operators/cuckoo.py) — the north-star's "per-partition
-    cuckoo-filter shards" made real. Must reproduce the plain BFS
-    oracle exactly: cuckoo filters have no false negatives (overflow
-    spills to a probed stash), and false positives only route a
-    candidate through the exact anti-join."""
-    from flyscrape_spark.operators.cuckoo import CuckooShards
-
-    config = CrawlConfig(depth=BFS_DEPTH, domain_filter=False)
-    pages = synthetic_pages(spark, sf_dir)
-    engine = CrawlEngine(
-        spark, config, JoinTransport(pages, config), collect_metrics=False,
-        seen_cuckoo=CuckooShards(spark, n_shards=8,
-                                 capacity_per_shard=1 << 14),
-    )
-    result = engine.run(["http://h0.example/d/0"])
-    return (
-        result.seen.filter(F.col("depth") <= BFS_DEPTH)
-        .select("url", F.col("depth").cast("int").alias("depth"))
-    )
-
-
-def sql_crawl_bfs_cuckoo() -> str:
-    return sql_crawl_bfs()
-
-
 MANUAL_DEPTH = 4
 
 
@@ -443,77 +391,6 @@ def q_seen_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         cands.join(seeds, "url", "left_anti")
         .select("url", portable_hash64(F.col("url")).alias("url_key"))
     )
-
-
-def q_seen_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The seen_antijoin expansion step routed through cuckoo-filter
-    shards (operators/cuckoo.py): seeds build the sharded filter,
-    filter-negative candidates are definitely new (bypass the join),
-    filter-positive candidates go through the exact string anti-join —
-    so the union equals the exact result and shares its oracle."""
-    from flyscrape_spark.operators.cuckoo import CuckooShards
-
-    docs = load(spark, sf_dir, "documents")
-    n = docs.count()
-    i = F.col("doc_id")
-    seeds = docs.filter(i % 97 == 0).select(_doc_url(i).alias("url"))
-    cands = (
-        docs.filter(i % 97 == 0)
-        .select(F.explode(F.array(_doc_url((2 * i + 1) % n),
-                                  _doc_url((3 * i + 2) % n))).alias("url"))
-        .distinct()
-        .withColumn("url_key", F.xxhash64("url"))
-    )
-    cf = CuckooShards(spark, n_shards=8, capacity_per_shard=1 << 14)
-    cf.add_keys(seeds.select(F.xxhash64("url").alias("url_key")))
-    maybe, fresh = cf.split(cands)
-    exact = maybe.join(seeds, "url", "left_anti")
-    return (
-        exact.unionByName(fresh)
-        .select("url", portable_hash64(F.col("url")).alias("url_key"))
-    )
-
-
-def sql_seen_cuckoo() -> str:
-    return sql_seen_antijoin()
-
-
-def q_seen_store_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The seen_antijoin expansion step against the BUCKETED seen store
-    (sources/seen_store.py) — the 10^10-scale anti-join layout, where
-    the seen side is read pre-partitioned/pre-sorted in place and only
-    the candidate side shuffles. Same exact semantics, same oracle."""
-    from flyscrape_spark.sources.seen_store import BucketedSeenStore
-
-    docs = load(spark, sf_dir, "documents")
-    n = docs.count()
-    i = F.col("doc_id")
-    seeds = docs.filter(i % 97 == 0).select(
-        _doc_url(i).alias("url"),
-        F.xxhash64(_doc_url(i)).alias("url_key"),
-    )
-    cands = (
-        docs.filter(i % 97 == 0)
-        .select(F.explode(F.array(_doc_url((2 * i + 1) % n),
-                                  _doc_url((3 * i + 2) % n))).alias("url"))
-        .distinct()
-        .withColumn("url_key", F.xxhash64("url"))
-    )
-    store = BucketedSeenStore(spark, table="seen_gate_store", buckets=8)
-    store.append(seeds.select("url_key", "url"))
-    seen = store.seen().select(F.col("url_key").alias("seen_key"),
-                               F.col("url").alias("seen_url"))
-    new = cands.join(
-        seen,
-        (cands["url_key"] == seen["seen_key"])
-        & (cands["url"] == seen["seen_url"]),
-        "left_anti",
-    )
-    return new.select("url", portable_hash64(F.col("url")).alias("url_key"))
-
-
-def sql_seen_store_antijoin() -> str:
-    return sql_seen_antijoin()
 
 
 def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -96,7 +96,9 @@ class SyntheticWebTransport:
         self.branching = branching
 
     def fetch(self, frontier: DataFrame) -> DataFrame:
-        i = F.regexp_extract("url", r"/d/(\d+)$", 1).cast("bigint")
+        # try_cast: a URL without /d/N (e.g. the /robots.txt probe)
+        # extracts "", which a plain cast rejects under ANSI mode
+        i = F.regexp_extract("url", r"/d/(\d+)$", 1).try_cast("bigint")
         known = i.isNotNull() & (i >= 0) & (i < self.n_pages)
 
         def url_of(expr):

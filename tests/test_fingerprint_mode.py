@@ -3,8 +3,7 @@ mode). Pins: (a) kernel-level anti-join equality with the exact
 (url_key, url) string-tiebreak join, (b) full-engine crawl equality
 (seen set, discovery order, fetched results) on a fixture web,
 (c) the fingerprint plan shuffles NO string column through the
-anti-join, (d) the bucketed store variant keeps the one-Exchange
-layout on the two long keys."""
+anti-join."""
 
 from pyspark.sql import functions as F
 
@@ -99,44 +98,3 @@ def test_fingerprint_join_shuffles_no_strings(spark):
     join = [l for l in plan.splitlines() if "SortMergeJoin" in l or
             "ShuffledHashJoin" in l or "BroadcastHashJoin" in l]
     assert join and all("url#" not in l and "seen_url" not in l for l in join)
-
-
-def test_bucketed_store_fingerprint_layout(spark, tmp_path):
-    """Fingerprint store: bucketed on (url_key, url_key2); the
-    anti-join against it shuffles only the candidate side."""
-    from flyscrape_spark.sources.seen_store import BucketedSeenStore
-
-    # a 100k-row key-only seen side is ~1.6 MB — small enough that AQE
-    # broadcasts it (fine at THIS size; at 10^10 rows it cannot). Force
-    # the non-broadcast plan to pin the at-scale bucket layout.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    store = BucketedSeenStore(spark, table="seen_fp_test", buckets=4,
-                              fingerprint=True)
-    inc = spark.range(100_000).select(
-        F.concat(F.lit("http://h/p"), "id").alias("url"),
-        F.xxhash64(F.concat(F.lit("http://h/p"), "id")).alias("url_key"),
-        F.lit(0).alias("depth"),
-        F.col("id").alias("discovery_order"),
-        F.xxhash64(F.concat(F.lit("http://h/p"), "id"), F.lit(1)).alias("url_key2"),
-    )
-    store.append(inc)
-    seen = store.seen()
-    cand = spark.range(50_000, 150_000).select(
-        F.xxhash64(F.concat(F.lit("http://h/p"), "id")).alias("url_key"),
-        F.xxhash64(F.concat(F.lit("http://h/p"), "id"), F.lit(1)).alias("url_key2"),
-    )
-    new = cand.join(
-        seen,
-        (cand["url_key"] == seen["url_key"])
-        & (cand["url_key2"] == seen["url_key2"]), "left_anti")
-    try:
-        assert new.count() == 50_000
-        plan = new._jdf.queryExecution().executedPlan().toString()
-        plan = plan.split("== Initial Plan ==")[0]
-        assert plan.count("Exchange") == 1  # candidate side only
-        assert "SelectedBucketsCount" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")

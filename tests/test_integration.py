@@ -1,10 +1,9 @@
 """Belt-and-braces: every engine feature enabled at once — robots,
-politeness-scheduled transport, snapshot checkpointing, bucketed seen
-store — must produce the identical crawl as the bare engine."""
+politeness-scheduled transport, snapshot checkpointing — must produce
+the identical crawl as the bare engine."""
 
 from flyscrape_spark.config import CrawlConfig
 from flyscrape_spark.plans.frontier import CrawlEngine
-from flyscrape_spark.sources.seen_store import BucketedSeenStore
 from flyscrape_spark.sources.snapshots import SnapshotStore
 from flyscrape_spark.sources.transport import JoinTransport, PoliteJoinTransport
 
@@ -42,7 +41,6 @@ def test_all_features_together(spark, tmp_path):
         spark, config,
         PoliteJoinTransport(pages(spark), config, shard_target=100),
         checkpoint=SnapshotStore(str(tmp_path / "snap")),
-        seen_store=BucketedSeenStore(spark, table="seen_integration", buckets=4),
     ).run(["http://x.test/"])
 
     assert canonical(full) == canonical(base)

@@ -10,6 +10,7 @@ from flyscrape_spark.config import CrawlConfig
 from flyscrape_spark.operators.politeness import schedule
 from flyscrape_spark.operators.robots import is_allowed, parse_robots
 from flyscrape_spark.plans.frontier import CrawlEngine
+from flyscrape_spark.sources.synth import SyntheticWebTransport, synthetic_web
 from flyscrape_spark.sources.transport import JoinTransport
 
 ROBOTS = """
@@ -136,3 +137,37 @@ def test_crawl_delay_feeds_scheduler(spark, robots_pages):
     b_times = pdf[pdf.host == "b.test"]["fetch_time"].tolist()
     assert min(pd.Series(a_times).diff().dropna()) >= 3.0
     assert min(pd.Series(b_times).diff().dropna()) >= 1.0
+
+
+def test_synthetic_transport_robots_probe_is_unknown_page(spark):
+    """A URL without /d/N (the robots.txt probe) comes back as an
+    unknown page instead of failing the cast under ANSI mode; /d/N
+    pages in the same frame render exactly as synthetic_web."""
+    frame = spark.createDataFrame(
+        [("http://w3.example/robots.txt",), ("http://w3.example/d/3",),
+         ("http://w3.example/d/99999999999999999999",)], "url string")
+    got = {r["url"]: r for r in
+           SyntheticWebTransport(10).fetch(frame).collect()}
+    probe = got["http://w3.example/robots.txt"]
+    assert (probe["status"], probe["body"], probe["error"]) == (
+        0, None, "Get: no such host")
+    assert got["http://w3.example/d/99999999999999999999"]["status"] == 0
+    page = got["http://w3.example/d/3"]
+    want = synthetic_web(spark, 10).filter(F.col("url") == page["url"]).first()
+    assert (page["status"], page["body"], page["error"]) == (
+        200, want["html"], None)
+
+
+def test_synthetic_transport_crawl_with_robots(spark):
+    """respect_robots over the synthetic web: every robots.txt probe is
+    an unknown page (allow-all), so the crawl equals the plain one."""
+    seeds = [f"http://w{i}.example/d/{i}" for i in range(3)]
+
+    def crawl(respect_robots):
+        config = CrawlConfig(depth=1, respect_robots=respect_robots)
+        r = CrawlEngine(spark, config, SyntheticWebTransport(50),
+                        collect_metrics=False).run(seeds)
+        return sorted((x["url"], x["depth"], x["discovery_order"])
+                      for x in r.seen.collect())
+
+    assert crawl(True) == crawl(False)

@@ -1,12 +1,9 @@
-"""Round-3 precision/scale knobs: trap whitelist + min_urls, bloom
-capacity guard, pretrained-LM broadcast path."""
+"""Round-3 precision/scale knobs: trap whitelist + min_urls,
+pretrained-LM broadcast path."""
 
 from __future__ import annotations
 
-import warnings
-
 import pytest
-from pyspark.sql import functions as F
 
 
 def _url_rows(host, paths):
@@ -70,42 +67,6 @@ def test_trap_min_urls_suppresses_small_samples(trap_hosts):
     guarded = _flags(trap_stats(trap_hosts, ratio=3.0, min_urls=10))
     assert guarded["tiny.example"] is False
     assert guarded["trap.example"] is True
-
-
-def test_bloom_capacity_guard_warns_once(spark):
-    from flyscrape_spark.operators.bloom import BroadcastBloom
-
-    bloom = BroadcastBloom(spark, n_bits=1 << 10, n_hashes=4)  # 102-key cap
-    keys = spark.range(0, 300).select(F.xxhash64("id").alias("url_key"))
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        bloom.add_keys(keys)
-        assert bloom.n_keys == 300
-        assert bloom.estimated_fp > 0.01
-        first = [x for x in w if "false-positive" in str(x.message)]
-        assert len(first) == 1
-        bloom.add_keys(keys)  # second breach: no second warning
-        again = [x for x in w if "false-positive" in str(x.message)]
-        assert len(again) == 1
-
-
-def test_bloom_guard_silent_within_capacity(spark):
-    from flyscrape_spark.operators.bloom import BroadcastBloom
-
-    bloom = BroadcastBloom(spark, n_bits=1 << 16, n_hashes=4)
-    keys = spark.range(0, 500).select(F.xxhash64("id").alias("url_key"))
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        bloom.add_keys(keys)
-        assert not [x for x in w if "false-positive" in str(x.message)]
-    assert bloom.n_keys == 500
-
-
-def test_giant_bitmap_recommends_seen_store(spark):
-    from flyscrape_spark.operators.bloom import BroadcastBloom
-
-    with pytest.warns(UserWarning, match="BucketedSeenStore"):
-        BroadcastBloom(spark, n_bits=1 << 34, n_hashes=4)
 
 
 def test_lm_pretrained_model_matches_in_corpus_scores(spark):

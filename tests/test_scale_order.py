@@ -6,7 +6,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from flyscrape_spark.config import CrawlConfig
-from flyscrape_spark.plans.frontier import CrawlEngine, assign_global_order
+from flyscrape_spark.plans.frontier import (
+    CrawlEngine, assign_global_order_counted,
+)
 from flyscrape_spark.sources.fixtures import SCENARIOS
 from flyscrape_spark.sources.transport import JoinTransport
 
@@ -18,8 +20,9 @@ def test_assign_global_order_matches_window(spark):
         F.col("id").alias("payload"),
     ).withColumn("parent_order", F.col("parent_order") * 10 + F.col("pos"))
     # unique sort keys required (and present: parent_order built unique)
-    two_phase = assign_global_order(
-        df, ["parent_order", "pos"], "n", start=100, parts=8
+    two_phase, _ = assign_global_order_counted(
+        df, ["parent_order", "pos"], "n", start=100, parts=8,
+        bounds=(0, 99730),
     )
     w = Window.orderBy("parent_order", "pos")
     windowed = df.withColumn("n", F.row_number().over(w) - 1 + F.lit(100))
@@ -76,8 +79,6 @@ def test_bucketed_order_matches_window_any_bounds(spark):
     """Deterministic-bucket mode (round-5): exact order for GOOD
     bounds, and for BAD bounds too — bounds only steer balance, the
     clamped monotonic bucketing can never reorder."""
-    from flyscrape_spark.plans.frontier import assign_global_order_counted
-
     df = spark.range(5_000).select(
         (F.col("id") * 2654435761 % 9973 * 10).alias("parent_order"),
         (F.col("id") % 7).cast("int").alias("pos"),
@@ -102,14 +103,13 @@ def test_bucketed_order_matches_window_any_bounds(spark):
 
 
 def test_counted_total_matches_rows(spark):
-    from flyscrape_spark.plans.frontier import assign_global_order_counted
-
     df = spark.range(999).select(
         F.col("id").alias("parent_order"),
         F.lit(0).cast("int").alias("pos"),
     )
     out, total = assign_global_order_counted(
-        df, ["parent_order", "pos"], "ord", start=0, parts=4
+        df, ["parent_order", "pos"], "ord", start=0, parts=4,
+        bounds=(0, 999),
     )
     assert total == 999
     assert out.count() == 999

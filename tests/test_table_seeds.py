@@ -172,3 +172,42 @@ def test_meta_robots_keeps_body_for_noindex_filter(spark):
     assert urls == {"http://m.test/kept"}  # noindex page dropped
     seen = {row["url"] for row in r.seen.collect()}
     assert "http://m.test/" in seen  # but crawled + links followed
+
+
+@pytest.mark.parametrize("seed", [
+    "http://a.test:8080/",
+    "http://user:pw@a.test/",
+    "http://user@A.TEST:8080/",
+    "http://[::1]:8080/",
+])
+def test_list_and_table_seed_hosts_agree(spark, seed):
+    """The default domain filter admits a seed's own host in BOTH seed
+    modes, with the host taken as ``host_of`` takes it: port and
+    userinfo stripped, lowercased, IPv6 brackets kept. A same-host link is followed, an
+    off-host link is seen but never fetched."""
+    pages = spark.createDataFrame(
+        [(seed, "a.test", 200,
+          '<a href="/in">in</a><a href="http://b.test/x">b</a>'),
+         (seed.rstrip("/") + "/in", "a.test", 200, "<p>in</p>"),
+         ("http://b.test/x", "b.test", 200, "<p>off-domain</p>")],
+        "url string, host string, status int, html string",
+    )
+    config = CrawlConfig(depth=2)  # domain_filter defaults on
+
+    def crawl(seeds, **kw):
+        engine = CrawlEngine(spark, config, JoinTransport(pages, config),
+                             collect_metrics=False)
+        return engine.run(seeds, **kw)
+
+    r_list = crawl([seed])
+    r_table = crawl(spark.createDataFrame(
+        [(seed, 0)], "url string, parent_order long"), n_seeds=1)
+    assert _ordered_seen(r_list) == _ordered_seen(r_table)
+
+    def results(r):
+        return sorted((x["url"], x["status"], x["error"])
+                      for x in r.results.collect())
+
+    assert results(r_list) == results(r_table)
+    assert {u for u, _, _ in results(r_list)} == {
+        seed, seed.rstrip("/") + "/in"}

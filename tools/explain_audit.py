@@ -404,13 +404,6 @@ CHECKS = {
         "group_limit": r"WindowGroupLimit",
         "no_cartesian": r"!CartesianProduct",
     },
-    "seen_cuckoo": {
-        # sharded cuckoo prefilter: cogrouped Arrow probe (one shuffle
-        # of each side by shard id), exact anti-join only on the
-        # filter-positive remainder, no cartesian anywhere
-        "cogrouped_probe": r"FlatMapCoGroupsInPandas",
-        "no_cartesian": r"!CartesianProduct",
-    },
     "substring_dedup": {
         # overlapping-window suffix dedup: ONE combinable count on the
         # 8-byte window hash, flag join without cartesian, doc_id
@@ -1056,23 +1049,8 @@ def _lm_broadcast_model(spark, sf_dir):
     return lm_scores(docs, model=(uni, bi, vocab))
 
 
-def _cuckoo_flag_plan(spark, sf_dir):
-    """The cuckoo PROBE plan (the driver query's split() checkpoints
-    the flagged frame, hiding the cogroup from the final plan — audit
-    the probe stage itself)."""
-    from pyspark.sql import functions as F
-
-    from flyscrape_spark.operators.cuckoo import CuckooShards
-
-    keys = spark.range(10_000).select(F.xxhash64("id").alias("url_key"))
-    cf = CuckooShards(spark, n_shards=8, capacity_per_shard=1 << 14)
-    cf.add_keys(keys)
-    return cf.flag(keys)
-
-
 PLAN_BUILDERS = {"pagerank": _lazy_pagerank, "hits_scores": _lazy_hits,
-                 "lm_scores_broadcast_model": _lm_broadcast_model,
-                 "seen_cuckoo": _cuckoo_flag_plan}
+                 "lm_scores_broadcast_model": _lm_broadcast_model}
 
 
 def audit(sf_dir: str, only: set[str] | None = None) -> list[tuple[str, str, bool, str]]:
