@@ -34,18 +34,3 @@ def portable_hash64(col: Column | str) -> Column:
 def portable_hash64_sql(expr: str) -> str:
     """DuckDB-side rendering of :func:`portable_hash64` for oracles."""
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def host_salt(host: Column | str, fanout: Column) -> Column:
-    """Salted partition key for per-host politeness: a host with
-    fanout k spreads over k partitions, each owning budget rate/k.
-
-    Reference has one *global* rate ticker
-    (/root/reference/modules/ratelimit/ratelimit.go:36-75); at cluster
-    scale per-host pacing must be local to a task, hence host-hash
-    partitioning with hot hosts salted across ``fanout`` shards.
-    """
-    h = F.col(host) if isinstance(host, str) else host
-    # deterministic shard choice: hash of the full row's URL spreads
-    # a hot host's rows uniformly over its fanout shards
-    return F.abs(F.xxhash64(h)) + F.pmod(F.xxhash64(F.col("url")), fanout)

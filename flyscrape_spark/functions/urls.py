@@ -5,7 +5,9 @@ The reference keeps URLs as exact strings (TrimSpace only,
 net/url ResolveReference (modules/followlinks/followlinks.go:70).
 We expose:
 
-- ``host_of`` / ``scheme_of``  — JVM-side parse_url (no Python),
+- ``trim_space``               — Go's strings.TrimSpace as a Column,
+- ``host_of`` / ``scheme_of`` / ``path_of`` — JVM-side parse_url that
+  never raises (no Python),
 - ``canonicalize``             — RFC-3986-lite canonical form as a pure
   Column expression chain, with a DuckDB rendering
   (``canonicalize_sql``) kept step-for-step identical so the driver's
@@ -32,14 +34,44 @@ _ABS = r"^[a-zA-Z][a-zA-Z0-9+.-]*://"
 _PREFIX = r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)"
 
 
-def host_of(url: Column | str) -> Column:
+# Go's unicode.IsSpace set: strings.TrimSpace strips it from both ends
+# of every enqueued URL (scrape.go:271). Python's str.strip() also
+# strips U+001C-U+001F; Spark's one-argument trim only U+0020.
+TRIM_SPACE = ("\t\n\v\f\r \u0085\u00a0\u1680" + "".join(map(chr, range(0x2000, 0x200B)))
+              + "\u2028\u2029\u202f\u205f\u3000")
+
+
+def trim_space(url: Column | str) -> Column:
+    """Go's ``strings.TrimSpace`` (character-set trim, no regex)."""
+    return F.trim(F.col(url) if isinstance(url, str) else url, F.lit(TRIM_SPACE))
+
+
+def _url_part(url: Column | str, part: str, pattern: str) -> Column:
+    """``parse_url(url, part)`` that never raises. Under ANSI mode
+    parse_url fails the job on any URL java.net.URI rejects (``/a b``,
+    ``/x|y``, ``?q={x}``); there the first group of ``pattern`` is used
+    instead. An accepted URL has a null PROTOCOL only if it has no
+    scheme, and ``pattern`` starts with a scheme, so every accepted
+    URL gets parse_url's value."""
     u = F.col(url) if isinstance(url, str) else url
-    return F.lower(F.parse_url(u, F.lit("HOST")))
+    fallback = F.nullif(F.regexp_extract(u, pattern, 1), F.lit(""))
+    return F.coalesce(
+        F.try_parse_url(u, F.lit(part)),
+        F.when(F.try_parse_url(u, F.lit("PROTOCOL")).isNull(), fallback),
+    )
+
+
+def host_of(url: Column | str) -> Column:
+    return F.lower(_url_part(
+        url, "HOST", _ABS + r"(?:[^/?#]*@)?(\[[^\]/?#]*\]|[^/?#:]*)"))
+
+
+def path_of(url: Column | str) -> Column:
+    return _url_part(url, "PATH", _ABS + r"[^/?#]*([^?#]*)")
 
 
 def scheme_of(url: Column | str) -> Column:
-    u = F.col(url) if isinstance(url, str) else url
-    return F.lower(F.parse_url(u, F.lit("PROTOCOL")))
+    return F.lower(_url_part(url, "PROTOCOL", r"^([a-zA-Z][a-zA-Z0-9+.-]*):"))
 
 
 def canonicalize(url: Column | str) -> Column:
@@ -310,7 +342,7 @@ def surt_key(url: Column | str) -> Column:
     per-URL hot path next to :func:`canonicalize`.
     """
     u = F.col(url) if isinstance(url, str) else url
-    host = F.lower(F.parse_url(u, F.lit("HOST")))
+    host = host_of(u)
     host = F.when(
         host.startswith("www."), F.substring(host, 5, 1 << 20)
     ).otherwise(host)

@@ -28,6 +28,7 @@ from dataclasses import dataclass, field
 from urllib.parse import urlparse
 
 from flyscrape_spark.config import CrawlConfig
+from flyscrape_spark.functions.urls import TRIM_SPACE
 from flyscrape_spark.parse.html import extract_links, extract_spans
 
 
@@ -103,7 +104,7 @@ def crawl_oracle(seeds, config: CrawlConfig, page_for, script=None) -> OracleRes
     (scrape.go:210-212), followlinks in the deferred ReceiveResponse
     (scrape.go:170-176)."""
     selectors = config.follow_selectors()
-    seed_urls = [s.strip() for s in seeds if s.strip()]
+    seed_urls = [s.strip(TRIM_SPACE) for s in seeds if s.strip(TRIM_SPACE)]
     allowed_domains = list(config.allowed_domains) + [
         urlparse(u).netloc.lower() for u in seed_urls if urlparse(u).netloc
     ]
@@ -118,7 +119,7 @@ def crawl_oracle(seeds, config: CrawlConfig, page_for, script=None) -> OracleRes
     rows: list[OracleRow] = []
 
     def enqueue(url: str, depth: int) -> None:
-        url = url.strip()
+        url = url.strip(TRIM_SPACE)
         if not url or url in visited:
             return
         visited.add(url)

@@ -25,8 +25,7 @@ Scale design notes (100 TB / 10^10-URL frontier):
   snapshot-table commits in checkpointed mode) so plans stay O(1) in
   the number of generations.
 - canonical total order costs one global sort per generation over
-  *newly discovered* URLs only; ``assign_order=False`` skips it for
-  throughput benchmarks where order equality is not being asserted.
+  *newly discovered* URLs only.
 """
 
 from __future__ import annotations
@@ -34,6 +33,7 @@ from __future__ import annotations
 import json
 import time
 from dataclasses import dataclass, field as dc_field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -46,11 +46,10 @@ from pyspark.sql.types import (
 )
 
 from flyscrape_spark.config import CrawlConfig
-from flyscrape_spark.functions.urls import canonicalize, host_of
-from flyscrape_spark.operators.robots import allowed_filter, robots_table
+from flyscrape_spark.functions.urls import canonicalize, host_of, scheme_of, trim_space
+from flyscrape_spark.operators.robots import ROBOTS_SCHEMA, allowed_filter, robots_table
 from flyscrape_spark.parse.udfs import make_page_udf
 from flyscrape_spark.plans import filters as filter_mod
-from flyscrape_spark.plans.filters import validators
 from flyscrape_spark.plans.priority import prioritize_frontier
 from flyscrape_spark.sources.transport import Transport
 
@@ -77,6 +76,52 @@ SEEN_SCHEMA = StructType(
 SEEN_SCHEMA_FP = StructType(
     list(SEEN_SCHEMA.fields) + [StructField("url_key2", LongType())]
 )
+
+# per-generation host-circuit-breaker increment (config.host_cooldown_ratio)
+HEALTH_SCHEMA = StructType(
+    [
+        StructField("host", StringType()),
+        StructField("n_fetches", LongType()),
+        StructField("n_errors", LongType()),
+    ]
+)
+
+
+def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty frame Catalyst knows is empty: ``limit(0)`` folds to an
+    empty LocalRelation, so a join against it is pruned at plan time.
+    Typed NULLs need no Python-side RDD, which ``createDataFrame([])``
+    builds (about 28 ms per frame against 10 ms, 4-vCPU host)."""
+    cols = (f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
+            for f in schema.fields)
+    return spark.range(0).selectExpr(*cols).limit(0)
+
+
+class _Increments:
+    """A table grown by one never-rewritten increment per generation
+    (seen set, robots cache, host health, results); readers scan the
+    union. Past 16 increments ``append`` folds the union into one
+    lazily pinned frame (computed by the next job that reads it), so
+    plan size and scan fan-in stay O(1) in crawl depth. Results are
+    read once, after the loop, so they are not folded."""
+
+    def __init__(self, spark: SparkSession, schema: StructType, frames=(),
+                 compact: bool = True):
+        self.spark = spark
+        self.schema = schema
+        self.frames = list(frames)
+        self.compact = compact
+
+    def append(self, frame: DataFrame) -> DataFrame:
+        self.frames.append(frame)
+        if self.compact and len(self.frames) > 16:
+            self.frames = [self.union().localCheckpoint(eager=False)]
+        return frame
+
+    def union(self) -> DataFrame:
+        if not self.frames:
+            return _empty(self.spark, self.schema)
+        return reduce(DataFrame.unionByName, self.frames)
 
 
 def assign_global_order_counted(
@@ -181,7 +226,6 @@ class CrawlEngine:
         transport: Transport,
         extract_udf=None,
         script_udf=None,  # parse.script.make_script_udf: struct<data, follow_urls>
-        assign_order: bool = True,
         keep_body: bool = False,
         checkpoint=None,  # optional SnapshotStore for resumable crawls
         max_generations: int = 1000,
@@ -195,7 +239,6 @@ class CrawlEngine:
         self.transport = transport
         self.extract_udf = extract_udf
         self.script_udf = script_udf
-        self.assign_order = assign_order
         self.keep_body = keep_body
         self.checkpoint = checkpoint
         self.max_generations = max_generations
@@ -212,13 +255,19 @@ class CrawlEngine:
         of magnitude across one crawl (1 seed -> millions of URLs); a
         fixed physical config is wrong at one end or the other. Small
         generations run latency-mode: AQE off (its stage-materialization
-        barriers cost ~1s/generation and buy nothing at these sizes)
-        and a handful of shuffle partitions. Large generations run
-        throughput-mode: AQE on (runtime coalescing, skew-join
-        splitting) with the session's full partition count. Both confs
-        are runtime-settable per Spark docs, so the engine flips them
-        between generations as the measured frontier size crosses the
-        threshold."""
+        barriers buy nothing at these sizes), a handful of shuffle
+        partitions, and the one-partition window ordering. Large
+        generations run throughput-mode: AQE on (runtime coalescing,
+        skew-join splitting) with the session's full partition count.
+        Both confs are runtime-settable per Spark docs, so the engine
+        flips them between generations as the measured frontier size
+        crosses the threshold.
+
+        Measured on a 4-vCPU host (perfbench ``deep_narrow_bfs``, 4 runs
+        each): removing this flip and the latency ordering path raised
+        the median crawl from 13.2 s to 16.7 s (+27%) and ran about 45%
+        more Spark jobs per crawl; AQE left on alone cost +24%, counted
+        ordering on small generations alone +23%."""
         conf = self.spark.conf
         self._latency_mode = est_rows < self.small_generation_rows
         if self._latency_mode:
@@ -322,95 +371,115 @@ class CrawlEngine:
             self.spark.conf.set("spark.sql.shuffle.partitions", self._base_parts)
 
     def _seed_frame(self, seeds, n_seeds: int | None):
-        """Normalize seeds to (candidates, n_seeds, valid) — see run()."""
-        spark = self.spark
-        config = self.config
-        if isinstance(seeds, DataFrame):
-            if "parent_order" not in seeds.columns:
-                raise ValueError(
-                    "DataFrame seeds must carry parent_order (seed index)")
-            cand = seeds
-            if "depth" not in cand.columns:
-                cand = cand.withColumn("depth", F.lit(0).cast("int"))
-            if "pos" not in cand.columns:
-                cand = cand.withColumn("pos", F.lit(0).cast("int"))
-            cand = cand.select("url", "depth", "parent_order", "pos")
-            if n_seeds is None:
-                n_seeds = cand.count()
-            seed_hosts: list[str] = []
-            if config.domain_filter:
-                seed_hosts = [
-                    r["h"]
-                    for r in cand.select(host_of("url").alias("h"))
-                    .distinct().collect()
-                    if r["h"]
-                ]
-            # urlfilter's seeds-always-pass exemption
-            # (urlfilter.go:57-100): seeds are exactly the depth-0
-            # candidates, so the exemption is a depth predicate — no
-            # O(seeds) url list on the driver
-            valid = filter_mod.domain_filter(config, seed_hosts) & (
-                filter_mod.url_filter(config, []) | (F.col("depth") == 0)
-            )
-            return cand, n_seeds, valid
-        seed_rows = []
-        for i, raw in enumerate(seeds):
-            url = raw.strip()
-            if url:
-                seed_rows.append((url, 0, int(i), 0))
-        candidates = spark.createDataFrame(seed_rows, CAND_SCHEMA)
-        seed_urls = [r[0] for r in seed_rows]
-        seed_hosts = self._hosts_of(seed_urls) if config.domain_filter else []
-        return candidates, len(seed_rows), validators(config, seed_urls, seed_hosts)
+        """Normalize seeds to (candidates, n_seeds, seed_hosts) — see
+        run(). Both modes yield the same (url, depth=0,
+        parent_order=seed index, pos=0) frame: trim, empty drop and the
+        urlfilter seed exemption happen in the loop, for seeds and
+        links alike. Only the seed hosts are read per mode."""
+        want_hosts = self.config.domain_filter
+        if not isinstance(seeds, DataFrame):
+            seeds = list(seeds)
+            cand = self.spark.createDataFrame(
+                [(url, 0, i, 0) for i, url in enumerate(seeds)], CAND_SCHEMA)
+            return cand, len(seeds), self._hosts_of(seeds) if want_hosts else []
+        if "parent_order" not in seeds.columns:
+            raise ValueError(
+                "DataFrame seeds must carry parent_order (seed index)")
+        cand = seeds
+        if "depth" not in cand.columns:
+            cand = cand.withColumn("depth", F.lit(0).cast("int"))
+        if "pos" not in cand.columns:
+            cand = cand.withColumn("pos", F.lit(0).cast("int"))
+        cand = cand.select("url", "depth", "parent_order", "pos")
+        if n_seeds is None:
+            n_seeds = cand.count()
+        seed_hosts: list[str] = []
+        if want_hosts:
+            seed_hosts = [
+                r["h"]
+                for r in cand.select(host_of(trim_space("url")).alias("h"))
+                .distinct().collect()
+                if r["h"]
+            ]
+        return cand, n_seeds, seed_hosts
 
     def _hosts_of(self, urls: list[str]) -> list[str]:
-        """Distinct non-empty ``host_of`` values of list seeds — the
-        very expression the domain filter applies, so port, userinfo
-        and bracketed-IPv6 handling match table mode exactly. The
-        JSON-encoded list is one inline VALUES row (a LocalRelation):
-        Catalyst folds the projection on the driver, no Spark job."""
+        """Distinct non-empty hosts of list seeds, through the very
+        trim and ``host_of`` the loop and the domain filter apply, so
+        port, userinfo and bracketed-IPv6 handling match table mode
+        exactly. The JSON-encoded list is one inline VALUES row (a
+        LocalRelation): Catalyst folds the projection on the driver,
+        no Spark job."""
         if not urls:
             return []
         row = self.spark.sql("SELECT * FROM VALUES (:urls) AS t(j)",
                              args={"urls": json.dumps(urls)})
         hosts = row.select(F.transform(
-            F.from_json("j", "array<string>"), host_of)).first()[0]
+            F.from_json("j", "array<string>"),
+            lambda u: host_of(trim_space(u)))).first()[0]
         return list(dict.fromkeys(h for h in hosts if h))
+
+    @staticmethod
+    def _host_health(fetched: DataFrame) -> DataFrame:
+        """A fetched frame's (host, n_fetches, n_errors) increment for
+        the host circuit breaker, lazily pinned: it folds into the next
+        generation's first job."""
+        from flyscrape_spark.operators.politeness import error_status_expr
+
+        errors = F.sum(F.when(error_status_expr(), 1).otherwise(0))
+        return fetched.groupBy("host").agg(
+            F.count("*").alias("n_fetches"), errors.alias("n_errors"),
+        ).localCheckpoint(eager=False)
+
+    def _result_view(self, fetched: DataFrame) -> DataFrame:
+        """A materialized fetched frame as the caller sees it in
+        ``CrawlResult.results``."""
+        frame = fetched.withColumn("spans", F.col("parsed.spans")).drop("parsed")
+        # follow_urls/has_body are frontier plumbing, not results
+        frame = frame.drop("follow_urls", "has_body")
+        if self.config.respect_meta_robots:
+            # noindex pages are crawled (seen/order intact, links
+            # already fanned out) but kept out of the corpus
+            from flyscrape_spark.operators.metarobots import meta_robots_cols
+
+            noindex, _ = meta_robots_cols("body")
+            frame = frame.filter(F.col("body").isNull() | ~noindex)
+        return frame if self.keep_body else frame.drop("body")
 
     def _run(self, seeds, n_seeds: int | None = None) -> CrawlResult:
         spark = self.spark
         config = self.config
 
-        candidates, n_seed_rows, valid = self._seed_frame(seeds, n_seeds)
+        candidates, n_seed_rows, seed_hosts = self._seed_frame(seeds, n_seeds)
+        # urlfilter's seeds-always-pass exemption (urlfilter.go:57-
+        # 100): seeds are exactly the depth-0 candidates, so the
+        # exemption is a depth predicate — no O(seeds) url list
+        valid = filter_mod.domain_filter(config, seed_hosts) & (
+            filter_mod.url_filter(config, []) | (F.col("depth") == 0)
+        )
 
-        start_gen = 0
-        n_robots_hosts = 0
-        seen_frames: list[DataFrame] = []
-        robots_frames: list[DataFrame] = []
-        result_frames: list[DataFrame] = []
-        health_frames: list[DataFrame] = []  # per-gen (host, n, errors)
-        metrics: list[dict] = []
-        next_order = 0
-
+        resumed = None
         if self.checkpoint is not None:
             resumed = self.checkpoint.resume(spark)
-            if resumed is not None:
-                (seen_frames, resumed_cands, result_frames,
-                 metrics, start_gen, next_order) = resumed
-                candidates = (
-                    resumed_cands if resumed_cands is not None
-                    else spark.createDataFrame([], CAND_SCHEMA)
-                )
-
-        def current_seen() -> DataFrame:
-            if not seen_frames:
-                return spark.createDataFrame(
-                    [], SEEN_SCHEMA_FP if config.seen_fingerprint
-                    else SEEN_SCHEMA)
-            out = seen_frames[0]
-            for frame in seen_frames[1:]:
-                out = out.unionByName(frame)
-            return out
+        (seen_frames, candidates, result_frames, metrics, start_gen,
+         next_order, robots_frames) = resumed or (
+            [], candidates, [], [], 0, 0, [])
+        if candidates is None:
+            candidates = _empty(spark, CAND_SCHEMA)
+        seen = _Increments(
+            spark, SEEN_SCHEMA_FP if config.seen_fingerprint else SEEN_SCHEMA,
+            seen_frames)
+        robots = _Increments(spark, ROBOTS_SCHEMA, robots_frames)
+        n_robots_hosts = robots.union().count() if robots_frames else 0
+        health = _Increments(spark, HEALTH_SCHEMA)
+        if config.host_cooldown_ratio is not None:
+            # host health is a pure function of the fetched frames, so
+            # a resumed crawl rebuilds it instead of committing it
+            for frame in result_frames:
+                health.append(self._host_health(frame))
+        results = _Increments(
+            spark, self._empty_results_schema(),
+            [self._result_view(f) for f in result_frames], compact=False)
 
         gen = start_gen
         prev_enqueued = n_seed_rows
@@ -419,9 +488,9 @@ class CrawlEngine:
             # candidate estimate = last generation's frontier x a
             # conservative link fan-out bound; gen 0 = the seed list
             self._set_generation_mode(max(prev_enqueued, 1) * 32)
-            # 1. trim + drop empties (enqueueJob, scrape.go:270-274)
+            # 1. TrimSpace + drop empties (enqueueJob, scrape.go:270-274)
             cand = (
-                candidates.withColumn("url", F.trim("url"))
+                candidates.withColumn("url", trim_space("url"))
                 .filter(F.col("url") != "")
                 .withColumn("url_key", self._key())
             )
@@ -436,23 +505,21 @@ class CrawlEngine:
             #    Exact mode: (url_key, url) equality — collision-exact.
             #    Fingerprint mode: (url_key, url_key2) — two longs, no
             #    strings in the join at all (16 B/row each side).
-            seen = current_seen()
+            seen_all = seen.union()
             if config.seen_fingerprint:
-                seen_keys = seen.select(
+                seen_keys = seen_all.select(
                     F.col("url_key").alias("seen_key"),
                     F.col("url_key2").alias("seen_key2"),
                 )
-            else:
-                seen_keys = seen.select(
-                    F.col("url_key").alias("seen_key"),
-                    F.col("url").alias("seen_url"),
-                )
-            if config.seen_fingerprint:
                 anti_cond = (
                     (cand["url_key"] == seen_keys["seen_key"])
                     & (cand["url_key2"] == seen_keys["seen_key2"])
                 )
             else:
+                seen_keys = seen_all.select(
+                    F.col("url_key").alias("seen_key"),
+                    F.col("url").alias("seen_url"),
+                )
                 anti_cond = (
                     (cand["url_key"] == seen_keys["seen_key"])
                     & (cand["url"] == seen_keys["seen_url"])
@@ -464,7 +531,12 @@ class CrawlEngine:
             # generations). Throughput mode: two-phase range-partition
             # enumeration — no single-task global sort at scale.
             n_enqueued = None
-            if self.assign_order and not self._latency_mode:
+            if self._latency_mode:
+                w = Window.orderBy("parent_order", "pos")
+                enqueued = enqueued.withColumn(
+                    "discovery_order", F.row_number().over(w) - 1 + F.lit(next_order)
+                )
+            else:
                 # counted variant: the generation's row count falls
                 # out of the two-phase enumeration's per-bucket
                 # counts, saving the separate count() job (and its
@@ -485,15 +557,6 @@ class CrawlEngine:
                     enqueued, ["parent_order", "pos"], "discovery_order",
                     start=next_order, bounds=order_bounds,
                 )
-            elif self.assign_order:
-                w = Window.orderBy("parent_order", "pos")
-                enqueued = enqueued.withColumn(
-                    "discovery_order", F.row_number().over(w) - 1 + F.lit(next_order)
-                )
-            else:
-                enqueued = enqueued.withColumn(
-                    "discovery_order", F.monotonically_increasing_id() + F.lit(next_order)
-                )
 
             seen_cols = ["url", "url_key", "depth", "discovery_order"]
             if config.seen_fingerprint:
@@ -509,20 +572,8 @@ class CrawlEngine:
             prev_enqueued = n_enqueued
 
             # 5. mark seen AT ENQUEUE (scrape.go:276-285) — before
-            # validators. The seen set accumulates as per-generation
-            # frontier increments (never rewritten); the anti-join
-            # above scans their union. Past 16 increments, compact the
-            # union into one pinned frame so plan size (and anti-join
-            # scan fan-in) stays O(1) in crawl depth. On Iceberg this
-            # is a data-compaction job over the seen table.
-            seen_frames.append(enqueued)
-            if len(seen_frames) > 16:
-                compacted = seen_frames[0]
-                for frame in seen_frames[1:]:
-                    compacted = compacted.unionByName(frame)
-                # lazy: the compaction runs inside the next
-                # generation's anti-join job, not as its own job
-                seen_frames = [compacted.localCheckpoint(eager=False)]
+            # validators: the frontier is the seen set's increment.
+            seen.append(enqueued)
 
             # 6. validators run at fetch time (scrape.go:162-168);
             #    depth filter is row-wise (inclusive <=, modules/depth/
@@ -557,14 +608,11 @@ class CrawlEngine:
             # cumulative error ratio tripped the threshold in EARLIER
             # generations are dropped at fetch time — they are already
             # seen (step 5), so this is validator-dropped semantics,
-            # same as budget truncation above. The health frames are
-            # host-cardinality partial aggregates, so the anti-join's
-            # build side stays tiny at any crawl size.
-            if config.host_cooldown_ratio is not None and health_frames:
-                h = health_frames[0]
-                for hf in health_frames[1:]:
-                    h = h.unionByName(hf)
-                tot = h.groupBy("host").agg(
+            # same as budget truncation above. The health increments
+            # are host-cardinality partial aggregates, so the
+            # anti-join's build side stays tiny at any crawl size.
+            if config.host_cooldown_ratio is not None:
+                tot = health.union().groupBy("host").agg(
                     F.sum("n_fetches").alias("n"),
                     F.sum("n_errors").alias("e"),
                 )
@@ -583,37 +631,20 @@ class CrawlEngine:
                 # carry the URL scheme so robots.txt is probed on the
                 # right origin (https hosts must not be probed over
                 # http); max() prefers https when a host shows both
-                scheme = F.lower(
-                    F.regexp_extract("url", r"^([A-Za-z][A-Za-z0-9+.-]*):", 1)
-                )
                 hosts = (
                     fetchable
-                    .select("host", F.nullif(scheme, F.lit("")).alias("scheme"))
+                    .select("host", scheme_of("url").alias("scheme"))
                     .groupBy("host")
                     .agg(F.max("scheme").alias("scheme"))
+                    .join(robots.union().select("host"), "host", "left_anti")
                 )
-                if robots_frames:
-                    known = robots_frames[0]
-                    for rf in robots_frames[1:]:
-                        known = known.unionByName(rf)
-                    new_hosts = hosts.join(
-                        known.select("host"), "host", "left_anti"
-                    )
-                else:
-                    known = None
-                    new_hosts = hosts
-                fetched_robots = self._materialize(
-                    robots_table(new_hosts, self.transport), "robots", gen
-                )
-                robots_frames.append(fetched_robots)
                 # cheap count on the materialized increment: gates the
                 # robots-join broadcast (millions of hosts at design
                 # scale must NOT be force-broadcast)
-                n_robots_hosts += fetched_robots.count()
-                robots_all = (
-                    known.unionByName(fetched_robots)
-                    if known is not None else fetched_robots
-                )
+                n_robots_hosts += robots.append(self._materialize(
+                    robots_table(hosts, self.transport), "robots", gen
+                )).count()
+                robots_all = robots.union()
                 fetchable = (
                     allowed_filter(fetchable, robots_all, n_hosts=n_robots_hosts)
                     .filter(F.col("robots_allowed"))
@@ -679,24 +710,9 @@ class CrawlEngine:
             else:
                 body_flag = F.col("body").isNotNull()
             fetched = self._materialize(fetched, "fetched", gen)
-            result_frames.append(fetched)
-
+            results.append(self._result_view(fetched))
             if config.host_cooldown_ratio is not None:
-                from flyscrape_spark.operators.politeness import (
-                    error_status_expr,
-                )
-
-                health_frames.append(
-                    fetched.groupBy("host")
-                    .agg(
-                        F.count("*").alias("n_fetches"),
-                        F.sum(
-                            F.when(error_status_expr(), 1).otherwise(0)
-                        ).alias("n_errors"),
-                    )
-                    # lazy: folds into the next generation's first job
-                    .localCheckpoint(eager=False)
-                )
+                health.append(self._host_health(fetched))
 
             # 10. link fan-out -> next generation's candidates.
             #     Non-2xx pages still follow links (deferred
@@ -751,38 +767,10 @@ class CrawlEngine:
             candidates = links
             gen += 1
 
-        results = None
-        for frame in result_frames:
-            if "parsed" in frame.columns:
-                frame = frame.withColumn("spans", F.col("parsed.spans")).drop("parsed")
-            # follow_urls/has_body are frontier plumbing, not results
-            frame = frame.drop("follow_urls", "has_body")
-            if config.respect_meta_robots:
-                # noindex pages are crawled (seen/order intact, links
-                # already fanned out above) but kept out of the corpus
-                from flyscrape_spark.operators.metarobots import (
-                    meta_robots_cols,
-                )
-
-                noindex, _ = meta_robots_cols("body")
-                frame = frame.filter(
-                    F.col("body").isNull() | ~noindex
-                )
-            frame = frame if self.keep_body else frame.drop("body")
-            results = frame if results is None else results.unionByName(frame)
-        if results is None:
-            results = spark.createDataFrame([], self._empty_results_schema())
-
-        robots_all = None
-        for rf in robots_frames:
-            robots_all = rf if robots_all is None else robots_all.unionByName(rf)
-
-        # current_seen(), not the loop-local binding: when the loop
-        # exits via max_generations the in-loop `seen` predates the
-        # final generation's append
         return CrawlResult(
-            seen=current_seen(), results=results, generations=gen,
-            metrics=metrics, robots=robots_all,
+            seen=seen.union(), results=results.union(), generations=gen,
+            metrics=metrics,
+            robots=robots.union() if robots.frames else None,
         )
 
     def _empty_results_schema(self) -> StructType:

@@ -32,6 +32,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from flyscrape_spark.functions.urls import host_of, path_of, scheme_of
+
 
 @dataclass(frozen=True)
 class Cookie:
@@ -70,9 +72,9 @@ def cookie_header(cookies: list[Cookie], url: Column | str = "url") -> Column:
     """The ``Cookie`` request-header value for each row's URL (empty
     string when nothing matches). All JVM-side expressions."""
     u = F.col(url) if isinstance(url, str) else url
-    host = F.lower(F.parse_url(u, F.lit("HOST")))
-    scheme = F.lower(F.parse_url(u, F.lit("PROTOCOL")))
-    path = F.coalesce(F.parse_url(u, F.lit("PATH")), F.lit("/"))
+    host = host_of(u)
+    scheme = scheme_of(u)
+    path = F.coalesce(path_of(u), F.lit("/"))
     path = F.when(path == "", "/").otherwise(path)
 
     def domain_match(c):

@@ -186,20 +186,17 @@ class SnapshotStore:
         """Return engine state after the last complete generation, or
         None for a fresh crawl:
         (seen_frames, candidates, result_frames, metrics, start_gen,
-        next_order)."""
+        next_order, robots_frames)."""
         manifests = self.manifests()
         if not manifests:
             return None
         last = manifests[-1]
         gens = [m["gen"] for m in manifests]
-        seen_frames = [
-            spark.read.parquet(m["tables"]["frontier"])
-            for m in manifests if "frontier" in m["tables"]
-        ]
-        result_frames = [
-            spark.read.parquet(m["tables"]["fetched"])
-            for m in manifests if "fetched" in m["tables"]
-        ]
+
+        def frames(table: str) -> list[DataFrame]:
+            return [spark.read.parquet(m["tables"][table])
+                    for m in manifests if table in m["tables"]]
+
         if "links" in last["tables"]:
             candidates = spark.read.parquet(last["tables"]["links"])
         else:
@@ -223,6 +220,6 @@ class SnapshotStore:
             )
         metrics = [m["metrics"] for m in manifests]
         return (
-            seen_frames, candidates, result_frames, metrics,
-            max(gens) + 1, last["next_order"],
+            frames("frontier"), candidates, frames("fetched"), metrics,
+            max(gens) + 1, last["next_order"], frames("robots"),
         )

@@ -124,18 +124,3 @@ class SyntheticWebTransport:
                         F.when(~known, F.lit("Get: no such host")).cast("string"))
             .withColumn("attempts", F.lit(1))
         )
-
-
-def synthetic_outlinks(frontier: DataFrame, fanout_mod: int = 40) -> DataFrame:
-    """Child candidate URLs: page id i emits ``xxhash64(i,7) % fanout``
-    synthetic child ids (FIXTURES.md) — a lazy posexplode fan-out."""
-    fan = F.pmod(F.xxhash64(F.col("id"), F.lit(7)), F.lit(fanout_mod))
-    children = F.transform(
-        F.sequence(F.lit(1), fan.cast("int")),
-        lambda k: F.xxhash64(F.col("id"), k),
-    )
-    return frontier.select(
-        F.col("id").alias("parent_id"),
-        F.col("depth") + 1,
-        F.posexplode(children).alias("pos", "child_id"),
-    )

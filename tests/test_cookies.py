@@ -35,6 +35,10 @@ def test_domain_path_secure_matching(spark):
         "https://shop.test/",
         "http://unrelated.test/",
         "http://notshop.test/",
+        # java.net.URI rejects these (ANSI parse_url would raise)
+        "http://shop.test/a b",
+        "http://shop.test/admin/x|y",
+        "https://shop.test/p?q={x}",
     ])
     # exact host: domain cookies + host-only both match
     assert h["http://shop.test/"] == "sid=abc; host_only=h"
@@ -49,6 +53,9 @@ def test_domain_path_secure_matching(spark):
     assert h["http://unrelated.test/"] == ""
     # suffix match requires a dot boundary: notshop.test != .shop.test
     assert h["http://notshop.test/"] == ""
+    assert h["http://shop.test/a b"] == "sid=abc; host_only=h"
+    assert h["http://shop.test/admin/x|y"] == "admin=1; sid=abc; host_only=h"
+    assert h["https://shop.test/p?q={x}"] == "sid=abc; host_only=h; tls=s"
 
 
 def test_longer_path_sorts_first(spark):

@@ -117,3 +117,38 @@ def test_extraction_udf(spark):
         "headline": "headline",
         "url": "https://localhost/",
     }
+
+
+@pytest.mark.parametrize("flags", [
+    {"domain_filter": False},
+    {"domain_filter": True},
+    {"domain_filter": True, "respect_robots": True},
+], ids=["no-domain-filter", "domain-filter", "robots"])
+def test_links_java_uri_rejects_crawl_like_oracle(spark, flags):
+    """A space, '|' or '{' in a link makes java.net.URI reject the URL,
+    and parse_url raises on it under ANSI mode. The host, domain and
+    robots steps still take such URLs, and the crawl equals the oracle."""
+    from flyscrape_spark.config import CrawlConfig
+    from flyscrape_spark.sources.transport import JoinTransport
+
+    pages = {
+        "http://a.test/": '<a href="/a b">1</a><a href="/x|y">2</a>'
+                          '<a href="/p?q={x}">3</a>',
+        "http://a.test/a b": '<a href="/deep">d</a>',
+        "http://a.test/x|y": "<p>x</p>",
+        "http://a.test/p?q={x}": "<p>p</p>",
+        "http://a.test/deep": "<p>deep</p>",
+    }
+    config = CrawlConfig(depth=2, **flags)
+    frame = spark.createDataFrame(
+        [(u, 200, html) for u, html in pages.items()],
+        "url string, status int, html string")
+    result = CrawlEngine(spark, config, JoinTransport(frame, config),
+                         collect_metrics=False).run(["http://a.test/"])
+    oracle = crawl_oracle(["http://a.test/"], config,
+                          lambda u: (200, pages[u]) if u in pages else None)
+    got = [(r["depth"], r["discovery_order"], r["url"])
+           for r in result.seen.orderBy("discovery_order").collect()]
+    assert got == oracle.order
+    assert {r["url"] for r in result.results.collect()} == set(oracle.fetched)
+    assert set(oracle.fetched) == set(pages)

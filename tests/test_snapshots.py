@@ -128,3 +128,90 @@ def test_manifest_lineage_recorded(spark, scenario, tmp_path):
             assert part["rows"] > 0
             assert part["host_min"] <= part["host_max"]
         json.dumps(m)  # manifest is valid JSON-serializable
+
+
+def _pages(spark, rows):
+    return spark.createDataFrame(rows, "url string, status int, html string")
+
+
+def _interrupted(spark, config, pages, store_dir, stop_after):
+    """Crawl with checkpoints, stop after ``stop_after`` generations,
+    then resume with a fresh engine over the same store."""
+    from flyscrape_spark.sources.transport import JoinTransport
+
+    def engine(**kw):
+        return CrawlEngine(spark, config, JoinTransport(pages, config),
+                           checkpoint=SnapshotStore(store_dir), **kw)
+
+    engine(max_generations=stop_after).run(["http://a.test/"])
+    return engine().run(["http://a.test/"])
+
+
+def _robots_probes(spark, store_dir) -> list[str]:
+    """Every robots.txt fetch of a checkpointed crawl: each generation
+    commits one robots row per host it probed."""
+    return sorted(
+        r["host"]
+        for m in SnapshotStore(store_dir).manifests()
+        for r in spark.read.parquet(m["tables"]["robots"]).collect()
+    )
+
+
+def test_resume_restores_robots_cache(spark, tmp_path):
+    """A resumed crawl probes robots.txt only for hosts the committed
+    generations never probed, and still obeys the rules they fetched."""
+    from flyscrape_spark.config import CrawlConfig
+    from flyscrape_spark.sources.transport import JoinTransport
+
+    pages = _pages(spark, [
+        ("http://a.test/robots.txt", 200, "User-agent: *\nDisallow: /private"),
+        ("http://a.test/", 200,
+         '<a href="/1">1</a><a href="http://b.test/">b</a>'),
+        ("http://a.test/1", 200, '<a href="/private/x">p</a><a href="/2">2</a>'),
+        ("http://b.test/", 200, '<a href="http://a.test/3">3</a>'),
+        ("http://a.test/2", 200, "<p>2</p>"),
+        ("http://a.test/3", 200, "<p>3</p>"),
+        ("http://a.test/private/x", 200, "<p>private</p>"),
+    ])
+    config = CrawlConfig(depth=3, domain_filter=False, respect_robots=True)
+    full_dir, cut_dir = str(tmp_path / "full"), str(tmp_path / "cut")
+    full = CrawlEngine(spark, config, JoinTransport(pages, config),
+                       checkpoint=SnapshotStore(full_dir)).run(["http://a.test/"])
+    resumed = _interrupted(spark, config, pages, cut_dir, stop_after=1)
+
+    assert _robots_probes(spark, full_dir) == ["a.test", "b.test"]
+    assert _robots_probes(spark, cut_dir) == _robots_probes(spark, full_dir)
+    assert canonical(resumed) == canonical(full)
+    fetched = {r["url"] for r in resumed.results.collect()}
+    assert fetched == {r["url"] for r in full.results.collect()}
+    assert "http://a.test/private/x" not in fetched
+    assert sorted(r["host"] for r in resumed.robots.collect()) == [
+        "a.test", "b.test"]
+
+
+def test_resume_restores_host_health(spark, tmp_path):
+    """The host circuit breaker remembers, across a resume, the host it
+    tripped before the crawl stopped."""
+    from flyscrape_spark.config import CrawlConfig
+    from flyscrape_spark.sources.transport import JoinTransport
+
+    pages = _pages(spark, [
+        ("http://a.test/", 200,
+         '<a href="http://bad.test/1">b</a><a href="/g1">g</a>'),
+        ("http://bad.test/1", 503, '<a href="http://bad.test/2">b2</a>'),
+        ("http://a.test/g1", 200, '<a href="http://bad.test/3">b3</a>'),
+        ("http://bad.test/2", 503, "<p>x</p>"),
+        ("http://bad.test/3", 503, "<p>x</p>"),
+    ])
+    config = CrawlConfig(depth=3, domain_filter=False,
+                         host_cooldown_ratio=0.5, host_cooldown_min_fetches=1)
+    full = CrawlEngine(spark, config, JoinTransport(pages, config)).run(
+        ["http://a.test/"])
+    # stop right after the generation that trips bad.test
+    resumed = _interrupted(spark, config, pages, str(tmp_path / "cut"),
+                           stop_after=2)
+
+    fetched = {r["url"] for r in resumed.results.collect()}
+    assert fetched == {r["url"] for r in full.results.collect()}
+    assert fetched == {"http://a.test/", "http://bad.test/1", "http://a.test/g1"}
+    assert canonical(resumed) == canonical(full)

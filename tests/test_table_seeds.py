@@ -20,6 +20,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from flyscrape_spark.config import CrawlConfig
+from flyscrape_spark.functions.urls import TRIM_SPACE
+from flyscrape_spark.oracle import crawl_oracle
 from flyscrape_spark.plans.frontier import CrawlEngine
 from flyscrape_spark.sources.synth import SyntheticWebTransport
 from flyscrape_spark.sources.transport import JoinTransport
@@ -174,23 +176,39 @@ def test_meta_robots_keeps_body_for_noindex_filter(spark):
     assert "http://m.test/" in seen  # but crawled + links followed
 
 
-@pytest.mark.parametrize("seed", [
-    "http://a.test:8080/",
-    "http://user:pw@a.test/",
-    "http://user@A.TEST:8080/",
-    "http://[::1]:8080/",
+_HOST_SEEDS = ["http://a.test:8080/", "http://user:pw@a.test/",
+               "http://user@A.TEST:8080/", "http://[::1]:8080/"]
+
+
+@pytest.mark.parametrize("seeds", [
+    *(pytest.param([seed], id=seed) for seed in _HOST_SEEDS),
+    pytest.param(["http://a.test/\r"], id="trailing-cr"),
+    pytest.param(["http://a.test/\t"], id="trailing-tab"),
+    pytest.param(["http://a.test/\u00a0"], id="trailing-nbsp"),
+    pytest.param(["", "http://a.test/"], id="empty-entry"),
+    pytest.param(["http://a.test/", "http://a.test/"], id="duplicate"),
 ])
-def test_list_and_table_seed_hosts_agree(spark, seed):
-    """The default domain filter admits a seed's own host in BOTH seed
-    modes, with the host taken as ``host_of`` takes it: port and
-    userinfo stripped, lowercased, IPv6 brackets kept. A same-host link is followed, an
-    off-host link is seen but never fetched."""
+def test_list_and_table_seed_hosts_agree(spark, seeds):
+    """List seeds, table seeds and the oracle give the same crawl. The
+    default domain filter admits a seed's own host in BOTH seed modes,
+    with the host taken as ``host_of`` takes it: port and userinfo
+    stripped, lowercased, IPv6 brackets kept. Seeds are trimmed with
+    Go's TrimSpace set, empties dropped and duplicates enqueued once,
+    exactly as links are; a link whose href ends in U+00A0 is trimmed
+    too. Same-host links are followed, an off-host link is seen but
+    never fetched."""
+    seed = next(s.strip(TRIM_SPACE) for s in seeds if s.strip(TRIM_SPACE))
+    base = seed.rstrip("/")
+    html = {
+        seed: '<a href="/in">in</a><a href="/nb\u00a0">nb</a>'
+              '<a href="http://b.test/x">b</a>',
+        base + "/in": "<p>in</p>",
+        base + "/nb": "<p>nb</p>",
+        "http://b.test/x": "<p>off-domain</p>",
+    }
     pages = spark.createDataFrame(
-        [(seed, "a.test", 200,
-          '<a href="/in">in</a><a href="http://b.test/x">b</a>'),
-         (seed.rstrip("/") + "/in", "a.test", 200, "<p>in</p>"),
-         ("http://b.test/x", "b.test", 200, "<p>off-domain</p>")],
-        "url string, host string, status int, html string",
+        [(u, 200, h) for u, h in html.items()],
+        "url string, status int, html string",
     )
     config = CrawlConfig(depth=2)  # domain_filter defaults on
 
@@ -199,15 +217,20 @@ def test_list_and_table_seed_hosts_agree(spark, seed):
                              collect_metrics=False)
         return engine.run(seeds, **kw)
 
-    r_list = crawl([seed])
+    r_list = crawl(seeds)
     r_table = crawl(spark.createDataFrame(
-        [(seed, 0)], "url string, parent_order long"), n_seeds=1)
-    assert _ordered_seen(r_list) == _ordered_seen(r_table)
+        list(zip(seeds, range(len(seeds)))), "url string, parent_order long"),
+        n_seeds=len(seeds))
+    oracle = crawl_oracle(seeds, config,
+                          lambda u: (200, html[u]) if u in html else None)
+    assert _ordered_seen(r_list) == _ordered_seen(r_table) == [
+        (u, d, o) for d, o, u in oracle.order]
 
     def results(r):
         return sorted((x["url"], x["status"], x["error"])
                       for x in r.results.collect())
 
-    assert results(r_list) == results(r_table)
+    assert results(r_list) == results(r_table) == sorted(
+        (r.url, r.status, r.error) for r in oracle.rows if r.fetched)
     assert {u for u, _, _ in results(r_list)} == {
-        seed, seed.rstrip("/") + "/in"}
+        seed, base + "/in", base + "/nb"}

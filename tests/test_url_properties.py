@@ -10,7 +10,15 @@ import duckdb
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from flyscrape_spark.functions.urls import canonicalize, canonicalize_sql, resolve
+from flyscrape_spark.functions.urls import (
+    canonicalize,
+    canonicalize_sql,
+    host_of,
+    path_of,
+    resolve,
+    scheme_of,
+    surt_key,
+)
 
 # URL-ish strings: schemes, hosts with case/ports, paths, queries,
 # fragments, whitespace padding — plus outright junk
@@ -116,3 +124,49 @@ def test_resolve_fast_path_matches_general_path(origin, link):
     # root-relative links to string ops; byte-for-byte equality with
     # the general urljoin path is the contract
     assert resolve(origin, link) == _general_resolve(origin, link)
+
+
+# characters java.net.URI rejects (or that change how it splits a URL),
+# spliced anywhere into a URL-ish string
+_uri_char = st.sampled_from(list(" |{}^`<>\"\\[]%@:/?#_"))
+
+
+@st.composite
+def rough_url(draw):
+    base = draw(urlish()).strip()
+    at = draw(st.integers(0, len(base)))
+    return base[:at] + draw(st.text(alphabet=_uri_char, max_size=4)) + base[at:]
+
+
+@settings(max_examples=40, deadline=None)
+@given(urls=st.lists(st.one_of(urlish(), rough_url()), min_size=1, max_size=12))
+def test_url_parts_match_parse_url_and_never_raise(spark, urls):
+    """host_of / scheme_of / path_of equal parse_url on every URL
+    java.net.URI accepts (parse_url is ``new URI(url)``), and evaluate
+    without raising on the ones it rejects, where ANSI parse_url fails
+    the whole job."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import functions as F
+
+    def accepted(url):
+        try:
+            spark.sparkContext._jvm.java.net.URI(url)
+        except Py4JJavaError:
+            return False
+        return True
+
+    def parse_url(part):
+        return F.try_parse_url("u", F.lit(part))
+
+    rows = spark.createDataFrame([(u,) for u in urls], "u string").select(
+        "u",
+        host_of("u").alias("host"), F.lower(parse_url("HOST")).alias("p_host"),
+        scheme_of("u").alias("scheme"),
+        F.lower(parse_url("PROTOCOL")).alias("p_scheme"),
+        path_of("u").alias("path"), parse_url("PATH").alias("p_path"),
+        surt_key("u").alias("surt"),
+    ).collect()
+    for r in rows:
+        if accepted(r["u"]):
+            assert (r["host"], r["scheme"], r["path"]) == (
+                r["p_host"], r["p_scheme"], r["p_path"]), r["u"]
