@@ -15,6 +15,10 @@ to get wrong (SURVEY §7 "What's hard"):
          -> MARK SEEN (all enqueued URLs, even ones validators will
             drop: scrape.go:276-285 marks visited at enqueue, while
             validators run at fetch time, scrape.go:162-168)
+         -> DEPTH HORIZON: past config.depth every candidate of a
+            generation after the resume one sits at depth == gen (links
+            are stamped gen + 1), so nothing is fetchable; the crawl
+            records that generation's seen rows and ends there
          -> validators (depth <= max, domain, url-regex)
          -> fetch -> extract spans -> extract links -> next generation
 
@@ -307,6 +311,24 @@ class CrawlEngine:
             return self.checkpoint.commit(df, name, gen)
         return df.localCheckpoint(eager=False)
 
+    def _rows(self, frame: DataFrame, table: str, gen: int) -> int:
+        """Rows of a generation table ``_materialize`` returned. A
+        SnapshotStore read them from the footers of the part files it
+        just wrote (no Spark job); a lazy localCheckpoint is counted,
+        which also computes and pins it."""
+        if self.checkpoint is not None:
+            return self.checkpoint.rows(table, gen)
+        return frame.count()
+
+    def _publish(self, metrics: list[dict], gen_metrics: dict,
+                 next_order: int) -> None:
+        """Record a generation's metrics and, with a SnapshotStore,
+        atomically publish every table it committed."""
+        metrics.append(gen_metrics)
+        if self.checkpoint is not None:
+            self.checkpoint.commit_meta(
+                gen_metrics["generation"], gen_metrics, next_order)
+
     @staticmethod
     def dedupe_candidates(cand: DataFrame, fingerprint: bool = False) -> DataFrame:
         """In-generation first-seen dedup: keep the min
@@ -462,15 +484,15 @@ class CrawlEngine:
         if self.checkpoint is not None:
             resumed = self.checkpoint.resume(spark)
         (seen_frames, candidates, result_frames, metrics, start_gen,
-         next_order, robots_frames) = resumed or (
-            [], candidates, [], [], 0, 0, [])
+         next_order, robots_frames, committed_rows) = resumed or (
+            [], candidates, [], [], 0, 0, [], {})
         if candidates is None:
             candidates = _empty(spark, CAND_SCHEMA)
         seen = _Increments(
             spark, SEEN_SCHEMA_FP if config.seen_fingerprint else SEEN_SCHEMA,
             seen_frames)
         robots = _Increments(spark, ROBOTS_SCHEMA, robots_frames)
-        n_robots_hosts = robots.union().count() if robots_frames else 0
+        n_robots_hosts = committed_rows.get("robots", 0)
         health = _Increments(spark, HEALTH_SCHEMA)
         if config.host_cooldown_ratio is not None:
             # host health is a pure function of the fetched frames, so
@@ -565,7 +587,7 @@ class CrawlEngine:
                 enqueued.select(*seen_cols), "frontier", gen,
             )
             if n_enqueued is None:
-                n_enqueued = enqueued.count()
+                n_enqueued = self._rows(enqueued, "frontier", gen)
             if n_enqueued == 0:
                 break
             next_order += n_enqueued
@@ -574,6 +596,25 @@ class CrawlEngine:
             # 5. mark seen AT ENQUEUE (scrape.go:276-285) — before
             # validators: the frontier is the seen set's increment.
             seen.append(enqueued)
+
+            # 5a. depth horizon: links are stamped depth = gen + 1, so
+            # in every generation after the resume one all candidates
+            # sit at depth == gen, and past config.depth none passes
+            # the depth validator. Only start_gen can carry re-admitted
+            # or table-supplied depths, so it always runs the fetch
+            # half. The horizon generation's seen rows and discovery
+            # order are part of the contract; its robots, fetch, parse
+            # and fan-out would run on nothing, and the generation
+            # after it would have no candidates: the crawl ends here.
+            if (config.depth is not None and gen > config.depth
+                    and gen > start_gen):
+                gen_metrics = {"generation": gen, "enqueued": n_enqueued,
+                               "sec": round(time.time() - gen_t0, 3)}
+                if self.collect_metrics:
+                    gen_metrics["fetched"] = 0
+                self._publish(metrics, gen_metrics, next_order)
+                gen += 1
+                break
 
             # 6. validators run at fetch time (scrape.go:162-168);
             #    depth filter is row-wise (inclusive <=, modules/depth/
@@ -638,12 +679,12 @@ class CrawlEngine:
                     .agg(F.max("scheme").alias("scheme"))
                     .join(robots.union().select("host"), "host", "left_anti")
                 )
-                # cheap count on the materialized increment: gates the
-                # robots-join broadcast (millions of hosts at design
-                # scale must NOT be force-broadcast)
-                n_robots_hosts += robots.append(self._materialize(
-                    robots_table(hosts, self.transport), "robots", gen
-                )).count()
+                # the increment's row count gates the robots-join
+                # broadcast (millions of hosts at design scale must NOT
+                # be force-broadcast)
+                increment = robots.append(self._materialize(
+                    robots_table(hosts, self.transport), "robots", gen))
+                n_robots_hosts += self._rows(increment, "robots", gen)
                 robots_all = robots.union()
                 fetchable = (
                     allowed_filter(fetchable, robots_all, n_hosts=n_robots_hosts)
@@ -756,13 +797,12 @@ class CrawlEngine:
                 "sec": round(time.time() - gen_t0, 3),
             }
             if self.collect_metrics:
-                gen_metrics["fetched"] = fetched.count()
-            metrics.append(gen_metrics)
+                gen_metrics["fetched"] = self._rows(fetched, "fetched", gen)
             if self.checkpoint is not None:
                 # publish the generation atomically: frontier + fetched
                 # + next-gen links all committed, then the manifest
                 links = self.checkpoint.commit(links, "links", gen)
-                self.checkpoint.commit_meta(gen, gen_metrics, next_order)
+            self._publish(metrics, gen_metrics, next_order)
 
             candidates = links
             gen += 1

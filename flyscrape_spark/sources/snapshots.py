@@ -9,15 +9,24 @@ Iceberg-shaped so a real catalog can be swapped in on a cluster:
     root/
       data/<table>/gen=NNNNNN/part-*.parquet   -- immutable data files
       _manifests/gen-NNNNNN.json               -- atomic commit marker:
-          {gen, tables, metrics, next_order, lineage}
+          {gen, tables, rows, schemas, lineage, metrics, next_order}
+      _invalidated/inv-*.json                  -- force-refetch queue
+
+``rows`` maps each table to its row count and ``schemas`` to its Spark
+schema (``StructType.jsonValue()``). Like Iceberg's per-file record
+counts (``added-records``), the counts come from the parquet footers
+of the part files a commit just wrote (the store lives on the driver's
+file system, as the ``os.replace`` commits already require), and
+readers use the recorded schema, so neither counting nor reading a
+table back runs a Spark job.
 
 A generation is visible iff its manifest exists; manifests are written
-tmp+rename (atomic on POSIX), so a killed job leaves at most an
-invisible partial data dir and resume starts from the last *complete*
-generation with zero re-fetches of committed work.
+tmp + fsync + rename + directory fsync, so a killed job leaves at most
+an invisible partial data dir and resume starts from the last
+*complete* generation with zero re-fetches of committed work.
 
-Per-partition lineage (north_rule): each commit records per-partition
-row counts and host ranges for the generation's frontier.
+Per-partition lineage (north_rule): each commit records, per part
+file of the generation's frontier, its row count and host range.
 
 The reference's analog is the bbolt HTTP cache
 (/root/reference/modules/cache/cache.go:46-81) — a KV of fetched
@@ -30,10 +39,64 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+import uuid
+from collections import Counter
 from pathlib import Path
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def _atomic_json(path: Path, obj) -> None:
+    """Publish ``obj`` as ``path`` crash-safely: write a temp file in
+    the same directory, fsync it, rename it over ``path``, then fsync
+    the directory so the rename itself survives a crash."""
+    fd, tmp = tempfile.mkstemp(dir=path.parent, suffix=".tmp")
+    with os.fdopen(fd, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    dir_fd = os.open(path.parent, os.O_RDONLY)
+    try:
+        os.fsync(dir_fd)
+    finally:
+        os.close(dir_fd)
+
+
+def _part_files(path: str) -> list[Path]:
+    return sorted(Path(path).glob("part-*.parquet"))
+
+
+def _footer_rows(path: str) -> int:
+    """Rows of a written table, summed from its part-file footers."""
+    return sum(pq.read_metadata(p).num_rows for p in _part_files(path))
+
+
+def _lineage(path: str) -> list[dict]:
+    """Per-partition lineage of a frontier table: each non-empty part
+    file's partition id, row count and host range (``regexp_extract``
+    semantics: a URL without an http(s) host counts as host "")."""
+    out = []
+    for p in _part_files(path):
+        urls = pq.read_table(p, columns=["url"]).column("url")
+        if len(urls) == 0:
+            continue
+        host = pc.extract_regex(urls, r"^https?://(?P<h>[^/]+)")
+        hosts = pc.min_max(pc.fill_null(pc.struct_field(host, "h"), ""))
+        out.append({"pid": int(p.name.split("-")[1]), "rows": len(urls),
+                    "host_min": hosts["min"].as_py(),
+                    "host_max": hosts["max"].as_py()})
+    return out
+
+
+def _read(spark: SparkSession, path: str, schema: dict) -> DataFrame:
+    """Read a committed table with its recorded schema: no inference
+    job."""
+    return spark.read.schema(StructType.fromJson(schema)).parquet(path)
 
 
 class SnapshotStore:
@@ -41,6 +104,9 @@ class SnapshotStore:
         self.root = Path(root)
         (self.root / "_manifests").mkdir(parents=True, exist_ok=True)
         self._pending: dict[int, dict] = {}
+        # queue files resume() re-admitted; deleted once the next
+        # manifest that commits them is published
+        self._admitted_queue: list[Path] = []
 
     # -- paths ------------------------------------------------------------
 
@@ -55,46 +121,41 @@ class SnapshotStore:
     def commit(self, df: DataFrame, table: str, gen: int) -> DataFrame:
         """Write a generation's table and return the read-back handle
         (lineage-truncated: downstream plans scan parquet, not the
-        upstream DAG)."""
+        upstream DAG). Rows and lineage come from the part files just
+        written; the write is the only Spark job."""
         path = str(self._data_dir(table, gen))
         df.write.mode("overwrite").parquet(path)
-        self._pending.setdefault(gen, {"tables": {}})["tables"][table] = path
-        spark = df.sparkSession
-        out = spark.read.parquet(path)
+        pending = self._pending.setdefault(
+            gen, {"tables": {}, "rows": {}, "schemas": {}})
+        pending["tables"][table] = path
+        pending["rows"][table] = _footer_rows(path)
+        pending["schemas"][table] = df.schema.jsonValue()
         if table == "frontier":
-            self._pending[gen]["lineage"] = self._partition_lineage(out)
-        return out
+            pending["lineage"] = _lineage(path)
+        return df.sparkSession.read.schema(df.schema).parquet(path)
 
-    def _partition_lineage(self, frontier: DataFrame) -> list[dict]:
-        """Per-partition lineage: row count + host/url-key range."""
-        host = F.regexp_extract("url", r"^https?://([^/]+)", 1)
-        rows = (
-            frontier.withColumn("host", host)
-            .withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .agg(
-                F.count("*").alias("rows"),
-                F.min("host").alias("host_min"),
-                F.max("host").alias("host_max"),
-            )
-            .collect()
-        )
-        return [r.asDict() for r in rows]
+    def rows(self, table: str, gen: int) -> int:
+        """Row count of ``table`` as committed for ``gen`` (not yet
+        published)."""
+        return self._pending[gen]["rows"][table]
 
     def commit_meta(self, gen: int, metrics: dict, next_order: int) -> None:
-        """Atomically publish the generation (tmp+rename)."""
-        pending = self._pending.pop(gen, {"tables": {}})
-        manifest = {
+        """Atomically publish the generation. Its frontier holds every
+        URL a resume re-admitted from the force-refetch queue, so the
+        queue files are spent once the manifest is in place."""
+        pending = self._pending.pop(gen, {})
+        _atomic_json(self._manifest_path(gen), {
             "gen": gen,
-            "tables": pending["tables"],
+            "tables": pending.get("tables", {}),
+            "rows": pending.get("rows", {}),
+            "schemas": pending.get("schemas", {}),
             "lineage": pending.get("lineage", []),
             "metrics": metrics,
             "next_order": next_order,
-        }
-        fd, tmp = tempfile.mkstemp(dir=self.root / "_manifests", suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(gen))
+        })
+        for p in self._admitted_queue:
+            p.unlink(missing_ok=True)
+        self._admitted_queue = []
 
     # -- cache bypass / force-refetch ----------------------------------------
 
@@ -107,14 +168,13 @@ class SnapshotStore:
 
         Mechanics: each affected snapshot is rewritten WITHOUT the
         URLs into a fresh data dir, the manifest is atomically updated
-        to point at it (tmp+rename, same protocol as commit_meta), and
-        the dropped frontier rows (url, depth) are recorded under
-        ``_invalidated/``. ``resume`` re-admits them as candidates —
-        the seen anti-join passes (they are gone from seen), so they
-        refetch exactly once; everything else stays zero-refetch.
-        Returns the number of frontier rows invalidated."""
-        import uuid
-
+        to point at it (same protocol as commit_meta, with the table's
+        rows and lineage recomputed), and the dropped frontier rows
+        (url, depth) are recorded under ``_invalidated/``. ``resume``
+        re-admits them as candidates — the seen anti-join passes (they
+        are gone from seen), so they refetch exactly once; everything
+        else stays zero-refetch. Returns the number of frontier rows
+        invalidated."""
         urls = [u.strip() for u in urls if u and u.strip()]
         if not urls:
             return 0
@@ -126,7 +186,7 @@ class SnapshotStore:
                 path = m["tables"].get(table)
                 if not path:
                     continue
-                df = spark.read.parquet(path)
+                df = _read(spark, path, m["schemas"][table])
                 hits = df.filter(F.col("url").isin(urls))
                 hit_rows = hits.select(
                     "url", *(["depth"] if "depth" in df.columns else [])
@@ -145,33 +205,26 @@ class SnapshotStore:
                     "overwrite"
                 ).parquet(new_path)
                 m["tables"][table] = new_path
+                m["rows"][table] = _footer_rows(new_path)
+                if table == "frontier":
+                    m["lineage"] = _lineage(new_path)
                 changed = True
             if changed:
-                fd, tmp = tempfile.mkstemp(
-                    dir=self.root / "_manifests", suffix=".tmp"
-                )
-                with os.fdopen(fd, "w") as f:
-                    json.dump(m, f)
-                os.replace(tmp, self._manifest_path(gen))
+                _atomic_json(self._manifest_path(gen), m)
         if entries:
             inv_dir = self.root / "_invalidated"
             inv_dir.mkdir(exist_ok=True)
-            fd, tmp = tempfile.mkstemp(dir=inv_dir, suffix=".tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump(entries, f)
-            os.replace(tmp, inv_dir / f"inv-{uuid.uuid4().hex[:8]}.json")
+            _atomic_json(inv_dir / f"inv-{uuid.uuid4().hex[:8]}.json", entries)
         return len(entries)
 
-    def _consume_invalidated(self) -> list[dict]:
+    def _queued_invalidations(self) -> tuple[list[dict], list[Path]]:
         inv_dir = self.root / "_invalidated"
-        if not inv_dir.exists():
-            return []
+        paths = sorted(inv_dir.glob("inv-*.json")) if inv_dir.exists() else []
         entries: list[dict] = []
-        for p in sorted(inv_dir.glob("inv-*.json")):
+        for p in paths:
             with open(p) as f:
                 entries.extend(json.load(f))
-            os.unlink(p)
-        return entries
+        return entries, paths
 
     # -- resume -------------------------------------------------------------
 
@@ -186,7 +239,12 @@ class SnapshotStore:
         """Return engine state after the last complete generation, or
         None for a fresh crawl:
         (seen_frames, candidates, result_frames, metrics, start_gen,
-        next_order, robots_frames)."""
+        next_order, robots_frames, rows), where ``rows`` maps each
+        table to its committed row total.
+
+        Queued force-refetch URLs are re-admitted but stay queued
+        until the next commit_meta publishes them, so a crash between
+        here and that commit loses none."""
         manifests = self.manifests()
         if not manifests:
             return None
@@ -194,16 +252,17 @@ class SnapshotStore:
         gens = [m["gen"] for m in manifests]
 
         def frames(table: str) -> list[DataFrame]:
-            return [spark.read.parquet(m["tables"][table])
+            return [_read(spark, m["tables"][table], m["schemas"][table])
                     for m in manifests if table in m["tables"]]
 
         if "links" in last["tables"]:
-            candidates = spark.read.parquet(last["tables"]["links"])
+            candidates = _read(spark, last["tables"]["links"],
+                               last["schemas"]["links"])
         else:
             candidates = None
         # force-refetch queue: invalidated URLs re-enter as candidates
         # at their original depth, ordered before link-derived ones
-        invalidated = self._consume_invalidated()
+        invalidated, self._admitted_queue = self._queued_invalidations()
         if invalidated:
             from flyscrape_spark.plans.frontier import CAND_SCHEMA
 
@@ -219,7 +278,10 @@ class SnapshotStore:
                 else inv_df.unionByName(candidates)
             )
         metrics = [m["metrics"] for m in manifests]
+        rows: Counter[str] = Counter()
+        for m in manifests:
+            rows.update(m["rows"])
         return (
             frames("frontier"), candidates, frames("fetched"), metrics,
-            max(gens) + 1, last["next_order"], frames("robots"),
+            max(gens) + 1, last["next_order"], frames("robots"), rows,
         )

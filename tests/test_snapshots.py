@@ -4,6 +4,8 @@ generation snapshot with zero re-fetches of committed work
 /root/reference/modules/cache/cache.go)."""
 
 import json
+import os
+from pathlib import Path
 
 import pytest
 
@@ -215,3 +217,71 @@ def test_resume_restores_host_health(spark, tmp_path):
     assert fetched == {r["url"] for r in full.results.collect()}
     assert fetched == {"http://a.test/", "http://bad.test/1", "http://a.test/g1"}
     assert canonical(resumed) == canonical(full)
+
+
+def test_crash_after_resume_keeps_invalidated(spark, scenario, tmp_path):
+    """``resume()`` re-admits queued force-refetch URLs but keeps the
+    queue until a manifest commits them: a crash right after a resume
+    loses none."""
+    store_dir = str(tmp_path / "snap")
+    target = "http://www.google.com"
+    first = CrawlEngine(
+        spark, scenario.config, scenario.transport(spark),
+        checkpoint=SnapshotStore(store_dir),
+    ).run(scenario.seeds)
+    assert SnapshotStore(store_dir).invalidate(spark, [target]) == 1
+
+    # a process that resumes and dies before committing anything
+    assert SnapshotStore(store_dir).resume(spark) is not None
+
+    resumed = CrawlEngine(
+        spark, scenario.config, scenario.transport(spark),
+        checkpoint=SnapshotStore(store_dir),
+    ).run(scenario.seeds)
+    new_gens = resumed.metrics[len(first.metrics):]
+    assert sum(m["fetched"] for m in new_gens) == 1
+    rows = resumed.results.filter(resumed.results["url"] == target).collect()
+    assert len(rows) == 1 and rows[0]["status"] == 200
+    assert {r["url"] for r in resumed.results.collect()} == {
+        r["url"] for r in first.results.collect()
+    }
+    # spent once the generation that re-admitted it is published
+    assert not list((tmp_path / "snap" / "_invalidated").glob("inv-*.json"))
+
+
+def test_manifest_writes_fsync_before_rename(spark, scenario, tmp_path,
+                                             monkeypatch):
+    """Every manifest and queue file is fsynced before its rename, and
+    its directory after it (commit_meta, invalidate and the queue)."""
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        events.append(("fsync", os.fstat(fd).st_ino))
+        real_fsync(fd)
+
+    def replace(src, dst):
+        events.append(("replace", os.stat(src).st_ino,
+                       os.stat(Path(dst).parent).st_ino, Path(dst).parent.name))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    store_dir = str(tmp_path / "snap")
+    CrawlEngine(
+        spark, scenario.config, scenario.transport(spark),
+        checkpoint=SnapshotStore(store_dir),
+    ).run(scenario.seeds)
+    n_commits = sum(e[0] == "replace" for e in events)
+    assert SnapshotStore(store_dir).invalidate(
+        spark, ["http://www.google.com"]) == 1
+
+    replaces = [i for i, e in enumerate(events) if e[0] == "replace"]
+    dirs = [events[i][3] for i in replaces]
+    assert dirs[:n_commits] == ["_manifests"] * n_commits and n_commits >= 3
+    # invalidate rewrites at least one manifest, then writes the queue
+    assert "_manifests" in dirs[n_commits:-1] and dirs[-1] == "_invalidated"
+    for i in replaces:
+        _, src_ino, dir_ino, _ = events[i]
+        assert ("fsync", src_ino) in events[:i], "file not fsynced"
+        assert events[i + 1] == ("fsync", dir_ino), "directory not fsynced"
